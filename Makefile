@@ -1,7 +1,13 @@
 .PHONY: test package submit submit-stream bench bench-compare oracle plans
 
+# CPU count of this host: the default parallelism of every target below
+NPROC := $(shell env -u OMP_NUM_THREADS nproc)
+
+# the tier-1 suite (ROADMAP.md), then the benchmark's own unit tests
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$(NPROC)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+		timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+	python3 -m pytest perfbench/tests
 
 package:
 	mkdir -p dist
@@ -10,7 +16,7 @@ package:
 
 # cluster-style launch (north rule): swap --master for yarn/k8s on a real cluster
 submit: package
-	spark-submit --master local[$${SPARK_GRAFT_CPUS:-32}] \
+	spark-submit --master local[$${SPARK_GRAFT_CPUS:-$(NPROC)}] \
 		--conf spark.sql.shuffle.partitions=64 \
 		--conf spark.sql.adaptive.enabled=true \
 		--conf spark.sql.session.timeZone=UTC \
@@ -18,7 +24,7 @@ submit: package
 		scripts/submit_pipeline.py --clips synth:20000 --out /tmp/dfs_submit_out
 
 submit-stream: package
-	spark-submit --master local[$${SPARK_GRAFT_CPUS:-32}] \
+	spark-submit --master local[$${SPARK_GRAFT_CPUS:-$(NPROC)}] \
 		--conf spark.sql.shuffle.partitions=64 \
 		--conf spark.sql.adaptive.enabled=true \
 		--conf spark.sql.session.timeZone=UTC \

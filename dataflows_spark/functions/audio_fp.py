@@ -99,6 +99,21 @@ def ber_at_lag(wa: np.ndarray, wb: np.ndarray, lag: int) -> float:
     return float(np.unpackbits((a ^ b).view(np.uint8)).mean())
 
 
+@F.pandas_udf(DoubleType())
+def ber_udf(wa: pd.Series, wb: pd.Series, lag: pd.Series) -> pd.Series:
+    """Vectorized :func:`ber_at_lag` over (words_a, words_b, lag)
+    columns — the verify step of the batch operator and the streaming
+    sink; a missing side scores 1.0 (never verifies)."""
+    return pd.Series(
+        [
+            1.0
+            if a is None or b is None
+            else ber_at_lag(np.asarray(a, dtype=np.uint32), np.asarray(b, dtype=np.uint32), int(g))
+            for a, b, g in zip(wa, wb, lag)
+        ]
+    )
+
+
 def with_audio_fingerprint(
     df: DataFrame,
     bytes_col: str,
@@ -194,24 +209,11 @@ def audio_neardup_pairs(
         .filter(F.col("n_matches") >= min_matches)
     )
 
-    @F.pandas_udf(DoubleType())
-    def _ber(wa: pd.Series, wb: pd.Series, lag: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                1.0
-                if a is None or b is None
-                else ber_at_lag(
-                    np.asarray(a, dtype=np.uint32), np.asarray(b, dtype=np.uint32), int(g)
-                )
-                for a, b, g in zip(wa, wb, lag)
-            ]
-        )
-
     # candidate-only verify: the fat word arrays join in once per side
     return (
         cand.join(fp.select(F.col("id").alias("id_a"), F.col("words").alias("wa")), on="id_a")
         .join(fp.select(F.col("id").alias("id_b"), F.col("words").alias("wb")), on="id_b")
-        .withColumn("ber", _ber(F.col("wa"), F.col("wb"), F.col("lag")))
+        .withColumn("ber", ber_udf(F.col("wa"), F.col("wb"), F.col("lag")))
         .filter(F.col("ber") <= max_ber)
         .select("id_a", "id_b", "n_matches", "lag", "ber")
     )

@@ -32,29 +32,28 @@ The index machinery is shared with the other sinks: two
 
 Verify is the batch operator's alignment-aware bit-error rate at the
 median token lag (margin measured: 0.13 re-encode vs 0.48 distinct
-clips). Exactly-once / replay / compaction semantics are inherited
-unchanged: per-batch ``batch_id=N`` dirs, atomic markers, reads
-exclude the current batch, leveled auto-compaction.
+clips). Exactly-once / replay / compaction semantics are the shared
+:class:`_IncrementalDedupSink` protocol: per-batch ``batch_id=N``
+dirs, atomic markers, reads exclude the current batch, leveled
+auto-compaction.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 from ..functions.audio_fp import (
     DEFAULT_HOP,
     DEFAULT_MAX_BER,
     DEFAULT_N_FFT,
     DEFAULT_N_MELS,
-    ber_at_lag,
+    ber_udf,
     with_audio_fingerprint,
 )
-from .curation import _METRICS_CAP, _BucketedIndex, _touched_buckets
-from .sink import V2_COMMITTER, ExactlyOnceParquetSink, _atomic_write
+from .curation import _BucketedIndex, _candidate_rows, _IncrementalDedupSink
 
 
 def _expand_flips(w) -> F.Column:
@@ -64,7 +63,7 @@ def _expand_flips(w) -> F.Column:
     return F.array(w, *[w.bitwiseXOR(F.lit(1 << k)) for k in range(32)])
 
 
-class StreamingAudioDeduper(ExactlyOnceParquetSink):
+class StreamingAudioDeduper(_IncrementalDedupSink):
     """foreachBatch near-dup dedup of audio clips against the
     accumulated fingerprint index. Within-batch pairs keep the lower
     id; a batch clip matching an already-indexed one drops REGARDLESS
@@ -85,14 +84,13 @@ class StreamingAudioDeduper(ExactlyOnceParquetSink):
         collect_metrics: bool = False,
         compact_every: int | None = None,
     ):
-        super().__init__(path)
+        super().__init__(path, num_buckets, collect_metrics, compact_every)
         self.id_col = id_col
         self.bytes_col = bytes_col
         self.codec_col = codec_col
         self.sr_col = sr_col
         self.max_ber = max_ber
         self.min_matches = min_matches
-        self.num_buckets = num_buckets
         index_root = os.path.join(path, "state", "index")
         # descriptor params pinned: words stored under a different
         # mel/fft/hop geometry would never match probes (silent leak) —
@@ -107,9 +105,6 @@ class StreamingAudioDeduper(ExactlyOnceParquetSink):
             # only (the cleaner's doc-text discipline) — no blooms
             build_blooms=False,
         )
-        self.collect_metrics = collect_metrics
-        self.batch_metrics: list[dict] = []
-        self.compact_every = compact_every
 
     def _tokens(self, fp: DataFrame) -> DataFrame:
         """(id, t, w) index-token rows: one per non-silence frame."""
@@ -118,157 +113,75 @@ class StreamingAudioDeduper(ExactlyOnceParquetSink):
             .filter(F.col("w") != 0)
         )
 
-    def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return
-        spark = df.sparkSession
-        fp = with_audio_fingerprint(
-            df, self.bytes_col, self.codec_col, self.sr_col, self.id_col
-        ).cache()
-        # per-batch materialize-once frames: cache()+unpersist in the
-        # finally (never localCheckpoint — see StreamingCorpusCleaner)
-        ephemeral: list[DataFrame] = []
-        try:
-            toks = self._tokens(fp)
-            # probe side: every token expanded to its 33 one-flip
-            # variants (codegen array + explode — stays JVM-side)
-            probes = toks.select(
-                F.col("id").alias("id_b"),
-                F.col("t").alias("tb"),
-                F.explode(_expand_flips(F.col("w"))).alias("w"),
-            )
+    def _enrich(self, df: DataFrame) -> DataFrame:
+        return with_audio_fingerprint(df, self.bytes_col, self.codec_col, self.sr_col, self.id_col)
 
-            @F.pandas_udf(DoubleType())
-            def _ber(wa, wb, lag):
-                import numpy as np
-                import pandas as pd
+    def _dedup(self, fp: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
+        toks = self._tokens(fp)
+        # probe side: every token expanded to its 33 one-flip variants
+        # (codegen array + explode — stays JVM-side)
+        probes = toks.select(
+            F.col("id").alias("id_b"),
+            F.col("t").alias("tb"),
+            F.explode(_expand_flips(F.col("w"))).alias("w"),
+        )
 
-                return pd.Series(
-                    [
-                        1.0
-                        if a is None or b is None
-                        else ber_at_lag(
-                            np.asarray(a, dtype=np.uint32),
-                            np.asarray(b, dtype=np.uint32),
-                            int(g),
-                        )
-                        for a, b, g in zip(wa, wb, lag)
-                    ]
+        def pairs_from(cand_toks: DataFrame) -> DataFrame:
+            """(id_a, id_b, n_matches, lag) from matched token rows."""
+            return (
+                cand_toks.groupBy("id_a", "id_b")
+                .agg(
+                    F.count("*").alias("n_matches"),
+                    F.expr("percentile_approx(tb - ta, 0.5)").cast("int").alias("lag"),
                 )
+                .filter(F.col("n_matches") >= self.min_matches)
+            )
 
-            def pairs_from(cand_toks: DataFrame) -> DataFrame:
-                """(id_a, id_b, n_matches, lag) from matched token rows."""
-                return (
-                    cand_toks.groupBy("id_a", "id_b")
-                    .agg(
-                        F.count("*").alias("n_matches"),
-                        F.expr("percentile_approx(tb - ta, 0.5)").cast("int").alias("lag"),
-                    )
-                    .filter(F.col("n_matches") >= self.min_matches)
+        def verify(cand: DataFrame, words_a: DataFrame) -> DataFrame:
+            """BER at the estimated lag; id_b rows that fail drop."""
+            return (
+                cand.join(words_a, on="id_a")
+                .join(
+                    fp.select(F.col("id").alias("id_b"), F.col("words").alias("wb")),
+                    on="id_b",
                 )
+                .withColumn("ber", ber_udf(F.col("wa"), F.col("wb"), F.col("lag")))
+                .filter(F.col("ber") <= self.max_ber)
+                .select(F.col("id_b").alias("id"))
+            )
 
-            def verify(cand: DataFrame, words_a: DataFrame) -> DataFrame:
-                """BER at the estimated lag; id_b rows that fail drop."""
-                return (
-                    cand.join(words_a, on="id_a")
-                    .join(
-                        fp.select(F.col("id").alias("id_b"), F.col("words").alias("wb")),
-                        on="id_b",
+        # within-batch: exact tokens on the a-side, expanded probes on
+        # the b-side (same recall as the cross path), lower id survives
+        within_cand = (
+            toks.select(F.col("id").alias("id_a"), F.col("t").alias("ta"), "w")
+            .join(probes, on="w")
+            .filter(F.col("id_a") < F.col("id_b"))
+        )
+        batch_words = fp.select(F.col("id").alias("id_a"), F.col("words").alias("wa"))
+        drops = verify(pairs_from(within_cand), batch_words)
+        if self._toks.exists():
+            # Bloom screen the EXPANDED probe set: without it the ×33
+            # expansion would drag the whole token index through the
+            # join every batch
+            sus, seen = self._probe(self._toks, probes, "w", batch_id)
+            if seen is not None:
+                seen = seen.select(F.col("clip_id").alias("id_a"), F.col("t").alias("ta"), "w")
+                cross = self._cache(pairs_from(seen.join(sus, on="w")))
+                ids = cross.select(F.col("id_a").alias("clip_id"))
+                _, seen_words = self._probe(self._words, ids, "clip_id", batch_id)
+                if seen_words is not None:
+                    index_words = _candidate_rows(seen_words, ids, "clip_id").select(
+                        F.col("clip_id").alias("id_a"), F.col("words").alias("wa")
                     )
-                    .withColumn("ber", _ber(F.col("wa"), F.col("wb"), F.col("lag")))
-                    .filter(F.col("ber") <= self.max_ber)
-                    .select(F.col("id_b").alias("id"))
-                )
+                    # cross pairs: id_b drops on a verified match, NO id
+                    # ordering (first-seen wins)
+                    drops = drops.unionByName(verify(cross, index_words))
+        return fp, drops
 
-            # within-batch: exact tokens on the a-side, expanded probes
-            # on the b-side (same recall as the cross path), lower id
-            # survives
-            within_cand = (
-                toks.select(F.col("id").alias("id_a"), F.col("t").alias("ta"), "w")
-                .join(probes, on="w")
-                .filter(F.col("id_a") < F.col("id_b"))
-            )
-            batch_words = fp.select(F.col("id").alias("id_a"), F.col("words").alias("wa"))
-            drops = verify(pairs_from(within_cand), batch_words)
-
-            m = {"batch_id": batch_id, "index_read_bytes": 0, "index_total_bytes": 0}
-            if self._toks.exists():
-                # Bloom screen the EXPANDED probe set: only words the
-                # corpus has actually seen (plus the ~0.06% FP residue)
-                # reach the pruned read and the join — without it the
-                # ×33 expansion would drag the whole token index
-                # through the join every batch
-                sus = self._toks.screen_keys(probes, F.col("w"), batch_id)
-                sus = (sus if sus is not None else probes).cache()
-                ephemeral.append(sus)
-                tok_buckets = _touched_buckets(sus, F.col("w"), self.num_buckets)
-                if tok_buckets:
-                    if self.collect_metrics:
-                        rb, tb_ = self._toks.pruned_bytes(tok_buckets, batch_id)
-                        sb = self._toks.sidecar_bytes(batch_id)
-                        m["index_read_bytes"] += rb + sb
-                        m["index_total_bytes"] += tb_ + sb
-                    seen = self._toks.read_pruned(spark, tok_buckets, batch_id).select(
-                        F.col("clip_id").alias("id_a"), F.col("t").alias("ta"), "w"
-                    )
-                    cross = pairs_from(seen.join(sus, on="w")).cache()
-                    ephemeral.append(cross)
-                    cap = 1000  # the cleaner's _LUT_PUSHDOWN_CAP discipline
-                    cand_ids = [
-                        r[0]
-                        for r in cross.select("id_a").distinct().limit(cap + 1).collect()
-                    ]
-                    if cand_ids:
-                        wbk = _touched_buckets(
-                            cross.select(F.col("id_a").alias("clip_id")),
-                            F.col("clip_id"),
-                            self.num_buckets,
-                        )
-                        if self.collect_metrics:
-                            rb, tb_ = self._words.pruned_bytes(wbk, batch_id)
-                            m["index_read_bytes"] += rb
-                            m["index_total_bytes"] += tb_
-                        seen_words = self._words.read_pruned(spark, wbk, batch_id)
-                        if len(cand_ids) <= cap:
-                            seen_words = seen_words.filter(F.col("clip_id").isin(cand_ids))
-                        else:
-                            seen_words = seen_words.join(
-                                cross.select(F.col("id_a").alias("clip_id")).distinct(),
-                                on="clip_id",
-                                how="left_semi",
-                            )
-                        index_words = seen_words.select(
-                            F.col("clip_id").alias("id_a"), F.col("words").alias("wa")
-                        )
-                        # cross pairs: id_b drops on a verified match,
-                        # NO id ordering (first-seen wins)
-                        drops = drops.unionByName(verify(cross, index_words))
-
-            survivors = fp.join(drops.distinct(), on="id", how="left_anti")
-            target = os.path.join(self.data_dir, f"batch_id={batch_id}")
-            survivors.select(F.col("id").alias(self.id_col)).write.mode("overwrite").options(
-                **V2_COMMITTER
-            ).parquet(target)
-            # ALL batch rows enter the index (a dropped clip still drops
-            # later near-dups of it — drop-rule parity with the siblings)
-            self._toks.write(
-                self._tokens(fp).withColumnRenamed("id", "clip_id"), F.col("w"), batch_id
-            )
-            self._words.write(
-                fp.select(F.col("id").alias("clip_id"), "words"), F.col("clip_id"), batch_id
-            )
-            _atomic_write(self._commit_marker(batch_id), {"batch_id": batch_id})
-            if self.collect_metrics:
-                self.batch_metrics.append(m)
-                del self.batch_metrics[:-_METRICS_CAP]
-            if self.compact_every and (batch_id + 1) % self.compact_every == 0:
-                done = set(self.committed_batches())
-                for idx in (self._toks, self._words):
-                    idx.compact(spark, done)
-        finally:
-            for cp in ephemeral:
-                cp.unpersist()
-            fp.unpersist()
-
-    def read(self, spark: SparkSession, latest_only: bool = True) -> DataFrame:
-        return super().read(spark, latest_only=False)
+    def _index_rows(self, fp: DataFrame) -> list[tuple[_BucketedIndex, DataFrame, str]]:
+        # ALL batch rows enter the index (a dropped clip still drops
+        # later near-dups of it — drop-rule parity with the siblings)
+        return [
+            (self._toks, self._tokens(fp).withColumnRenamed("id", "clip_id"), "w"),
+            (self._words, fp.select(F.col("id").alias("clip_id"), "words"), "clip_id"),
+        ]

@@ -153,39 +153,54 @@ def write_sidecar(df: DataFrame, key, bucket_expr, batch_dir: str) -> None:
     blobs.repartition(1).write.mode("overwrite").parquet(os.path.join(batch_dir, SIDECAR))
 
 
+def partition_dirs(root: str, prefix: str = "batch_id="):
+    """``(value, path)`` of every ``<prefix><int>`` subdir of ``root``
+    (nothing when ``root`` is missing; unparseable names are skipped).
+    The one walk of the ``batch_id=N/<bucket_col>=K`` index tree:
+    applied to a table root it yields batch dirs, applied to a batch
+    dir with ``prefix='<bucket_col>='`` it yields bucket leaves."""
+    if not os.path.isdir(root):
+        return
+    for e in os.listdir(root):
+        if e.startswith(prefix):
+            try:
+                value = int(e[len(prefix):])
+            except ValueError:
+                continue
+            yield value, os.path.join(root, e)
+
+
+def _sidecar_files(index_path: str, exclude_batch: int):
+    """``(sidecar dir, its file names)`` of every ``batch_id !=
+    exclude_batch`` dir; the list is empty when the dir has no sidecar."""
+    for bid, bdir in partition_dirs(index_path):
+        if bid != exclude_batch:
+            side = os.path.join(bdir, SIDECAR)
+            yield side, os.listdir(side) if os.path.isdir(side) else []
+
+
 def read_blobs(
     spark: SparkSession, index_path: str, exclude_batch: int
 ) -> DataFrame | None:
     """All blob rows of every ``batch_id != exclude_batch`` dir, or
-    ``None`` if ANY such dir lacks a sidecar (a pre-Bloom index: the
-    caller must fall back to the unscreened path — correctness never
-    depends on sidecars existing)."""
+    ``None`` if the table is missing or ANY such dir lacks a sidecar (a
+    pre-Bloom index: the caller must fall back to the unscreened path —
+    correctness never depends on sidecars existing)."""
     if not os.path.isdir(index_path):
         return None
     paths = []
-    for e in os.listdir(index_path):
-        if not e.startswith("batch_id="):
-            continue
-        try:
-            bid = int(e.split("=", 1)[1])
-        except ValueError:
-            continue
-        if bid == exclude_batch:
-            continue
-        side = os.path.join(index_path, e, SIDECAR)
-        if not os.path.isdir(side):
-            return None  # mixed-era index → screen cannot be trusted
+    for side, files in _sidecar_files(index_path, exclude_batch):
         # pass the PART FILES, not the underscore dir: Spark's file
         # listing deliberately skips _-prefixed entries (that is what
         # hides the sidecar from data reads of the batch dir), so the
         # sidecar dir itself must never be handed to the reader
         parts = [
             os.path.join(side, f)
-            for f in os.listdir(side)
+            for f in files
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         ]
         if not parts:
-            return None
+            return None  # mixed-era index → screen cannot be trusted
         paths.extend(parts)
     if not paths:
         return spark.createDataFrame([], _BLOB_SCHEMA)
@@ -195,24 +210,12 @@ def read_blobs(
 def sidecar_bytes(index_path: str, exclude_batch: int) -> int:
     """Filesystem bytes of every eligible sidecar — the screen's own
     read cost, charged into the bench's read-bytes accounting."""
-    total = 0
-    if not os.path.isdir(index_path):
-        return 0
-    for e in os.listdir(index_path):
-        if not e.startswith("batch_id="):
-            continue
-        try:
-            if int(e.split("=", 1)[1]) == exclude_batch:
-                continue
-        except ValueError:
-            continue
-        side = os.path.join(index_path, e, SIDECAR)
-        if os.path.isdir(side):
-            for f in os.listdir(side):
-                p = os.path.join(side, f)
-                if os.path.isfile(p):
-                    total += os.path.getsize(p)
-    return total
+    return sum(
+        os.path.getsize(p)
+        for side, files in _sidecar_files(index_path, exclude_batch)
+        for p in (os.path.join(side, f) for f in files)
+        if os.path.isfile(p)
+    )
 
 
 def screen(keys_df: DataFrame, key, bucket_expr, blobs: DataFrame) -> DataFrame:

@@ -41,21 +41,21 @@ execution model:
   (tens of ids per batch), so the fat index columns (doc TEXT /
   vectors) are read through a collected-id ``In`` filter that parquet
   row-group stats turn into file skips — per-batch fat-column IO is
-  O(candidates) regardless of corpus size (semi-join fallback past a
-  1000-id cap).
+  O(candidates) regardless of corpus size (semi-join fallback past the
+  session's parquet ``In``-pushdown threshold).
 - **Compaction**: :func:`compact_index` (or ``compact_every=N`` on
   the sinks) merges committed batch dirs so the per-read file LISTING
   stays O(num_buckets) instead of growing with stream age — the
   sandbox analog of Iceberg manifest compaction, crash-guarded by a
   sentinel the meta check refuses.
 - **Exactly-once**: survivors land in per-batch parquet dirs committed
-  by atomic markers (:class:`ExactlyOnceParquetSink` protocol); the
-  index is APPEND-ONLY per-batch (batch ids are fresh by construction,
-  and a replay overwrites its own ``batch_id=N`` dir), and every index
-  read excludes the current batch_id via a partition filter — so a
-  replayed or half-failed micro-batch sees exactly the pre-batch index
-  and converges to the same state — proven by the kill-restart +
-  replay tests.
+  by atomic markers (the :class:`_IncrementalDedupSink` protocol,
+  shared by all three dedup sinks); the index is APPEND-ONLY per-batch
+  (batch ids are fresh by construction, and a replay overwrites its
+  own ``batch_id=N`` dir), and every index read excludes the current
+  batch_id via a partition filter — so a replayed or half-failed
+  micro-batch sees exactly the pre-batch index and converges to the
+  same state — proven by the kill-restart + replay tests.
 
 SEMANTICS NOTE (streaming vs batch): the batch pipeline keeps the
 LOWEST doc_id of each duplicate group; a stream keeps the FIRST-SEEN.
@@ -76,9 +76,11 @@ maintainable across restarts.
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as txt
@@ -87,12 +89,16 @@ from ..functions.dedup import (
     DEFAULT_NGRAM,
     DEFAULT_NUM_BANDS,
     DEFAULT_NUM_HASHES,
+    _check_banding,
+    arrow_minhash_udf,
     char_ngrams,
     jaccard,
     minhash_bands,
     minhash_sig_expr,
 )
-from .sink import V2_COMMITTER, ExactlyOnceParquetSink
+from ..functions.similarity import cosine_sim, lsh_signature
+from . import bloom
+from .sink import V2_COMMITTER, ExactlyOnceParquetSink, _atomic_write, committed_ids
 
 
 def curation_filter(
@@ -173,9 +179,7 @@ class _BucketedIndex:
         self.build_blooms = build_blooms
 
     def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        )
+        return any(bloom.partition_dirs(self.path))
 
     def _meta(self) -> dict:
         return {
@@ -198,8 +202,6 @@ class _BucketedIndex:
         under current config would silently ignore the accumulated
         corpus). Re-bucketing is the one supported migration — see
         :meth:`rebucket` / :func:`rebucket_index`."""
-        import json
-
         sentinel = os.path.join(self.path, "_compacting.json")
         if os.path.exists(sentinel):
             raise ValueError(
@@ -218,8 +220,6 @@ class _BucketedIndex:
                 # keys, every key it DID persist matches the requested
                 # config — the on-disk rows are compatible, so backfill
                 # the missing keys instead of forcing a state rebuild
-                from .sink import _atomic_write
-
                 _atomic_write(meta_path, expect)
                 return
             bad = {k: stored.get(k) for k in expect if stored.get(k) != expect[k]}
@@ -246,11 +246,9 @@ class _BucketedIndex:
                 "stream (or restore the matching metadata)."
             )
         os.makedirs(self.path, exist_ok=True)
-        from .sink import _atomic_write
-
         _atomic_write(meta_path, expect)
 
-    def _write_width(self, spark: SparkSession) -> int:
+    def _write_width(self, spark: SparkSession, num_buckets: int | None = None) -> int:
         """Shuffle width for bucket-partitioned writes. Hash-partitioning
         on the bucket column sends each bucket value to exactly ONE task
         regardless of the width, so the output stays ≤ one file per
@@ -260,7 +258,36 @@ class _BucketedIndex:
         buckets ≫ cores (the corpus-sizing rule at large corpora —
         e.g. 12k buckets for a 24k-doc index would otherwise mean 12k
         near-empty tasks per write of a 500-doc batch)."""
-        return min(self.num_buckets, spark.sparkContext.defaultParallelism * 4)
+        return min(num_buckets or self.num_buckets, spark.sparkContext.defaultParallelism * 4)
+
+    def _write_bucketed(
+        self, df: DataFrame, path: str, num_buckets: int | None = None, partition_by: tuple = ()
+    ) -> None:
+        """Write ``df`` to ``path`` partitioned by ``partition_by`` and
+        the bucket column. Each bucket lands in exactly one task → ≤
+        ``num_buckets`` files per dir, not shuffle_partitions ×
+        num_buckets; width capped (see :meth:`_write_width`). Per-write
+        v2 committer: O(buckets) dir renames commit in parallel inside
+        the tasks — safe because every target is invisible to readers
+        until a commit marker or a dir swap makes it live, and a replay
+        overwrites it wholesale."""
+        (
+            df.repartition(self._write_width(df.sparkSession, num_buckets), F.col(self.bucket_col))
+            .write.mode("overwrite")
+            .options(**V2_COMMITTER)
+            .partitionBy(*partition_by, self.bucket_col)
+            .parquet(path)
+        )
+
+    def _rebuild_sidecar(self, spark: SparkSession, batch_dir: str) -> None:
+        """A fresh Bloom sidecar for a rewritten batch dir, built from
+        the dir's own rows."""
+        bloom.write_sidecar(
+            spark.read.parquet(batch_dir),
+            F.col(self.key_name),
+            F.col(self.bucket_col).cast("int"),
+            batch_dir,
+        )
 
     def compact(
         self, spark: SparkSession, committed: set[int] | None = None, mode: str = "leveled"
@@ -311,10 +338,7 @@ class _BucketedIndex:
         self._check_meta()
         if not os.path.isdir(self.path):
             return 0
-        by_id = {}
-        for e in os.listdir(self.path):
-            if e.startswith("batch_id="):
-                by_id[int(e.split("=", 1)[1])] = e
+        by_id = {b: os.path.basename(d) for b, d in bloom.partition_dirs(self.path)}
         if committed is None:
             if by_id:
                 raise ValueError(
@@ -348,25 +372,15 @@ class _BucketedIndex:
                 "state is corrupt (stale markers or hand-edited dirs); refusing "
                 "to compact around it."
             )
-        import shutil
-
         batch_dirs = [by_id[b] for b in merge_ids]
         tmp = self.path.rstrip("/") + ".__compact_tmp"
         shutil.rmtree(tmp, ignore_errors=True)
-        (
+        # tmp only becomes the index via the sentinel-guarded swap below
+        self._write_bucketed(
             spark.read.option("basePath", self.path)
             .parquet(*(os.path.join(self.path, e) for e in batch_dirs))
-            .drop("batch_id")
-            # each bucket lands in exactly one task → ≤ num_buckets
-            # output files; width capped (see _write_width)
-            .repartition(self._write_width(spark), F.col(self.bucket_col))
-            .write.mode("overwrite")
-            # per-write v2 committer: O(buckets) dir renames commit in
-            # parallel inside the tasks; safe here because the tmp dir
-            # only becomes the index via the sentinel-guarded swap below
-            .options(**V2_COMMITTER)
-            .partitionBy(self.bucket_col)
-            .parquet(tmp)
+            .drop("batch_id"),
+            tmp,
         )
         if self.build_blooms:
             # fresh sidecar for the merged dir, built BEFORE the swap so
@@ -375,16 +389,7 @@ class _BucketedIndex:
             # screen cost and accumulated FPR reset at every compaction
             # instead of growing with total batches ever committed. One
             # extra O(index) pass — compaction is already O(index).
-            from . import bloom
-
-            bloom.write_sidecar(
-                spark.read.parquet(tmp),
-                F.col(self.key_name),
-                F.col(self.bucket_col).cast("int"),
-                tmp,
-            )
-        from .sink import _atomic_write
-
+            self._rebuild_sidecar(spark, tmp)
         # seal the merged dir: leveled compactions skip it from now on
         # (written into tmp BEFORE the swap, so the rename is atomic
         # with its marker)
@@ -419,35 +424,23 @@ class _BucketedIndex:
         self._check_meta()  # refuse if the on-disk config mismatches
         if new_num_buckets == self.num_buckets:
             return
-        from .sink import _atomic_write
-
         meta_path = os.path.join(self.path, "_index_meta.json")
         if not self.exists():  # empty index → a pure metadata update
             self.num_buckets = new_num_buckets
             _atomic_write(meta_path, self._meta())
             return
-        import shutil
-
         tmp = self.path.rstrip("/") + ".__rebucket_tmp"
         old = self.path.rstrip("/") + ".__rebucket_old"
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(old, ignore_errors=True)
-        (
+        # tmp only becomes live via the dir swap below
+        self._write_bucketed(
             spark.read.parquet(self.path)
             .drop(self.bucket_col)
-            .withColumn(self.bucket_col, _bucket(F.col(self.key_name), new_num_buckets))
-            # each new bucket lands in exactly one task → ≤
-            # new_num_buckets files per batch dir, the same write
-            # discipline as write() (width capped — see _write_width)
-            .repartition(
-                min(new_num_buckets, spark.sparkContext.defaultParallelism * 4),
-                F.col(self.bucket_col),
-            )
-            .write.mode("overwrite")
-            # v2 committer safe: tmp only becomes live via the dir swap
-            .options(**V2_COMMITTER)
-            .partitionBy("batch_id", self.bucket_col)
-            .parquet(tmp)
+            .withColumn(self.bucket_col, _bucket(F.col(self.key_name), new_num_buckets)),
+            tmp,
+            new_num_buckets,
+            partition_by=("batch_id",),
         )
         if self.build_blooms:
             # Spark's rewrite skipped the old underscore-prefixed
@@ -455,17 +448,8 @@ class _BucketedIndex:
             # (a sidecar keyed by the old bucket hash would silently
             # mis-screen). O(batches) small jobs — rebucket is offline
             # and compaction keeps the batch-dir count bounded.
-            from . import bloom
-
-            for e in sorted(os.listdir(tmp)):
-                if e.startswith("batch_id="):
-                    bdir = os.path.join(tmp, e)
-                    bloom.write_sidecar(
-                        spark.read.option("basePath", tmp).parquet(bdir),
-                        F.col(self.key_name),
-                        F.col(self.bucket_col).cast("int"),
-                        bdir,
-                    )
+            for _, bdir in sorted(bloom.partition_dirs(tmp)):
+                self._rebuild_sidecar(spark, bdir)
         # swap dirs, then meta LAST: a crash before the meta write
         # leaves a bucket/meta mismatch that _check_meta refuses (fail
         # loud), never a silently mispruned index
@@ -477,28 +461,10 @@ class _BucketedIndex:
 
     def write(self, df: DataFrame, key: Column, batch_id: int) -> None:
         self._check_meta()
-        (
-            df.withColumn(self.bucket_col, _bucket(key, self.num_buckets))
-            # each bucket lands in exactly one task → ≤ num_buckets files
-            # per batch, not shuffle_partitions × num_buckets; width
-            # capped so buckets ≫ cores doesn't schedule thousands of
-            # empty tasks per micro-batch (see _write_width)
-            .repartition(self._write_width(df.sparkSession), F.col(self.bucket_col))
-            .write.mode("overwrite")
-            # v2 committer safe: the batch dir is invisible to readers
-            # until the caller's commit marker lands, and a replay
-            # overwrites the whole dir
-            .options(**V2_COMMITTER)
-            .partitionBy(self.bucket_col)
-            .parquet(os.path.join(self.path, f"batch_id={batch_id}"))
-        )
+        target = os.path.join(self.path, f"batch_id={batch_id}")
+        self._write_bucketed(df.withColumn(self.bucket_col, _bucket(key, self.num_buckets)), target)
         if self.build_blooms:
-            from . import bloom
-
-            bloom.write_sidecar(
-                df, key, _bucket(key, self.num_buckets),
-                os.path.join(self.path, f"batch_id={batch_id}"),
-            )
+            bloom.write_sidecar(df, key, _bucket(key, self.num_buckets), target)
 
     def screen_keys(self, keys_df: DataFrame, key: Column, exclude_batch: int) -> DataFrame | None:
         """Rows of ``keys_df`` whose key MIGHT already be indexed
@@ -510,17 +476,23 @@ class _BucketedIndex:
         whole index (see streaming/bloom.py)."""
         if not self.build_blooms:
             return None
-        from . import bloom
-
         blobs = bloom.read_blobs(keys_df.sparkSession, self.path, exclude_batch)
         if blobs is None:
             return None
         return bloom.screen(keys_df, key, _bucket(key, self.num_buckets), blobs)
 
     def sidecar_bytes(self, exclude_batch: int) -> int:
-        from . import bloom
+        """Bytes of the sidecars a screen reads (0 for a table that is
+        never screened)."""
+        return bloom.sidecar_bytes(self.path, exclude_batch) if self.build_blooms else 0
 
-        return bloom.sidecar_bytes(self.path, exclude_batch)
+    def _leaves(self, exclude_batch: int | None = None):
+        """``(batch_id, bucket, leaf dir)`` of every bucket leaf, the
+        ``exclude_batch`` dir left out."""
+        for bid, bdir in bloom.partition_dirs(self.path):
+            if bid != exclude_batch:
+                for bucket, leaf in bloom.partition_dirs(bdir, f"{self.bucket_col}="):
+                    yield bid, bucket, leaf
 
     def pruned_bytes(self, buckets: list[int], exclude_batch: int) -> tuple[int, int]:
         """(bytes a pruned read touches, total index bytes) measured at
@@ -535,31 +507,12 @@ class _BucketedIndex:
         num_buckets with the corpus (see the sizing rule)."""
         want = {int(b) for b in buckets}
         read = total = 0
-        if not os.path.isdir(self.path):
-            return 0, 0
-        for e in os.listdir(self.path):
-            if not e.startswith("batch_id="):
-                continue
-            try:
-                bid = int(e.split("=", 1)[1])
-            except ValueError:
-                continue
-            bdir = os.path.join(self.path, e)
-            for sub in os.listdir(bdir):
-                if not sub.startswith(f"{self.bucket_col}="):
-                    continue
-                try:
-                    bucket = int(sub.split("=", 1)[1])
-                except ValueError:
-                    continue
-                sz = sum(
-                    os.path.getsize(os.path.join(bdir, sub, f))
-                    for f in os.listdir(os.path.join(bdir, sub))
-                    if os.path.isfile(os.path.join(bdir, sub, f))
-                )
-                total += sz
-                if bid != exclude_batch and bucket in want:
-                    read += sz
+        for bid, bucket, leaf in self._leaves():
+            paths = (os.path.join(leaf, f) for f in os.listdir(leaf))
+            sz = sum(os.path.getsize(p) for p in paths if os.path.isfile(p))
+            total += sz
+            if bid != exclude_batch and bucket in want:
+                read += sz
         return read, total
 
     def read_pruned(self, spark: SparkSession, buckets: list[int], exclude_batch: int) -> DataFrame:
@@ -579,31 +532,14 @@ class _BucketedIndex:
         self._check_meta()  # reads run BEFORE writes in a batch — a
         # mismatched modulus must fail here, not after a wrong dedup
         want = {int(b) for b in buckets}
-        prefix = f"{self.bucket_col}="
         paths = sample = None
         if os.path.isdir(self.path):
             paths = []
-            for e in os.listdir(self.path):
-                if not e.startswith("batch_id="):
-                    continue
-                try:
-                    bid = int(e.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if bid == exclude_batch:
-                    continue
-                bdir = os.path.join(self.path, e)
-                for sub in os.listdir(bdir):
-                    if not sub.startswith(prefix):
-                        continue
-                    try:
-                        b = int(sub.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if b in want:
-                        paths.append(os.path.join(bdir, sub))
-                    elif sample is None:
-                        sample = os.path.join(bdir, sub)
+            for _, b, leaf in self._leaves(exclude_batch):
+                if b in want:
+                    paths.append(leaf)
+                elif sample is None:
+                    sample = leaf
         if paths:
             df = spark.read.option("basePath", self.path).parquet(*paths)
         elif paths is not None and sample is not None:
@@ -625,7 +561,6 @@ def _index_tables(path: str) -> list[_BucketedIndex]:
     ``StreamingEmbeddingDeduper``: one table directly AT
     ``state/index``) — into loaded :class:`_BucketedIndex` objects,
     reconstructed entirely from the persisted metadata."""
-    import json
 
     def is_table(d: str) -> bool:
         return os.path.exists(os.path.join(d, "_index_meta.json"))
@@ -692,9 +627,7 @@ def _sink_committed_set(table_dir: str) -> set[int] | None:
     for _ in range(4):
         commits = os.path.join(d, "_commits")
         if os.path.isdir(commits):
-            return {
-                int(f.split(".")[0]) for f in os.listdir(commits) if f.endswith(".json")
-            }
+            return set(committed_ids(commits))
         parent = os.path.dirname(d)
         if parent == d:
             break
@@ -734,13 +667,180 @@ def _touched_buckets(df: DataFrame, key: Column, num_buckets: int) -> list[int]:
     ]
 
 
-class StreamingCorpusCleaner(ExactlyOnceParquetSink):
+def _candidate_rows(table: DataFrame, ids: DataFrame, col: str) -> DataFrame:
+    """Rows of ``table`` whose ``col`` is one of the values of ``ids``
+    (a one-column frame, also named ``col``).
+
+    Banding keeps candidate sets small (measured 10-40 distinct ids per
+    5k-doc batch on the sf1 corpus), but a hash-bucketed id set of even
+    ~30 ids touches most buckets, so bucket pruning alone still scans
+    ~the whole fat table (doc text, vectors, fingerprint words) per
+    batch. Each index id lives in exactly ONE file of one batch dir, so
+    the ids are collected and pushed into the scan as an ``In`` filter
+    whose parquet row-group stats skip every file holding no candidate:
+    fat-column IO becomes O(candidates) regardless of corpus size. The
+    cap is the session's ``spark.sql.parquet.pushdown.inFilterThreshold``
+    (1024 under ``build_session``) — past it Spark degrades the pushdown
+    to a min/max range, which skips nothing for scattered ids — and a
+    bigger set takes the left-semi join instead."""
+    cap = int(ids.sparkSession.conf.get("spark.sql.parquet.pushdown.inFilterThreshold"))
+    vals = [r[0] for r in ids.distinct().limit(cap + 1).collect()]
+    if len(vals) <= cap:
+        return table.filter(F.col(col).isin(vals))
+    return table.join(ids.distinct(), on=col, how="left_semi")
+
+
+class _IncrementalDedupSink(ExactlyOnceParquetSink):
+    """The incremental-dedup protocol of the text, embedding and audio
+    sinks: each micro-batch is deduped against every row ever indexed,
+    exactly-once. :meth:`write_batch` is the whole protocol; a modality
+    supplies only :meth:`_enrich`, :meth:`_dedup` (its drop set, from
+    within-batch and cross-index candidates plus verify),
+    :meth:`_index_rows` and, where its survivor rows differ,
+    :meth:`_emit`. ``read(spark)`` returns the survivors so far.
+
+    SIDE-EFFECT ORDER: survivors (``data/batch_id=N``) → every index
+    table's ``batch_id=N`` dir and Bloom sidecars → the atomic commit
+    marker (carrying the survivor row count observed on the write) →
+    leveled auto-compaction every ``compact_every`` batches. Every step
+    before the marker overwrites only the batch's own dirs, so a crash
+    anywhere replays into the same state; compaction runs after the
+    marker, so a crash inside it replays as a no-op (its sentinel makes
+    a partial dir swap refuse loudly on resume).
+
+    REPLAY EXCLUSION: a committed batch id is a no-op; every index read
+    excludes ``batch_id = N`` with a partition filter, so a replayed or
+    half-failed batch sees exactly the pre-batch index and converges.
+
+    PER-BATCH FRAMES use ``cache()`` and are unpersisted at batch end,
+    NOT ``localCheckpoint()``: a local checkpoint persists its RDD
+    outside the CacheManager, so ``Dataset.unpersist()`` cannot release
+    it and the blocks linger until JVM GC + ContextCleaner get to them —
+    on an unbounded stream they accumulate per batch and throttle the
+    session (measured: 8 s/batch fresh vs 60 s/batch 13 batches in, CPU
+    idle, all iowait/spill). The per-batch plans are shallow, so the
+    lineage truncation localCheckpoint adds buys nothing here.
+
+    ``collect_metrics`` (opt-in: it stats O(batches × num_buckets)
+    files per batch, a metadata-RPC storm on object stores) appends
+    ``{batch_id, index_read_bytes, index_total_bytes}`` per committed
+    batch to ``batch_metrics``, a rolling list capped at
+    ``_METRICS_CAP`` — the pruning-effectiveness series the bench
+    records. ``compact_every=None`` leaves compaction to
+    :func:`compact_index`."""
+
+    #: id column of the enriched frame; the drop set carries it too
+    _row_id = "id"
+
+    def __init__(
+        self, path: str, num_buckets: int, collect_metrics: bool, compact_every: int | None
+    ):
+        super().__init__(path)
+        self.num_buckets = num_buckets
+        self.collect_metrics = collect_metrics
+        self.batch_metrics: list[dict] = []
+        self.compact_every = compact_every
+
+    def _enrich(self, df: DataFrame) -> DataFrame:
+        """The micro-batch's one enrichment pass (cached by the caller)."""
+        raise NotImplementedError
+
+    def _dedup(self, enriched: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
+        """``(batch, drops)``: the rows that enter the index and whose
+        survivors are emitted, and the ``_row_id`` values to drop."""
+        raise NotImplementedError
+
+    def _index_rows(self, batch: DataFrame) -> list[tuple[_BucketedIndex, DataFrame, str]]:
+        """``(index table, rows, key column)`` for every index table, in
+        write (and compaction) order."""
+        raise NotImplementedError
+
+    def _emit(self, survivors: DataFrame) -> DataFrame:
+        return survivors.select(F.col(self._row_id).alias(self.id_col))
+
+    def _cache(self, df: DataFrame) -> DataFrame:
+        """``df`` cached for the rest of this batch."""
+        df = df.cache()
+        self._cached.append(df)
+        return df
+
+    def _probe(
+        self, index: _BucketedIndex, keys: DataFrame, key_col: str, batch_id: int
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """``(keys, pruned index read)`` for one index table. A table
+        with Bloom sidecars first screens ``keys`` down to the ones that
+        MIGHT be indexed (true matches + the ~0.06% FP residue, which
+        the caller's exact join verifies), so the read and the join stay
+        O(batch + matches) even when the batch's distinct keys ≫
+        ``num_buckets`` — the regime where bucket pruning alone reads
+        the whole index (see streaming/bloom.py). The read is then
+        pruned to the buckets the remaining keys touch; it is ``None``
+        when they touch none."""
+        key = F.col(key_col)
+        if index.build_blooms:
+            sus = index.screen_keys(keys, key, batch_id)
+            keys = self._cache(keys if sus is None else sus)
+        buckets = _touched_buckets(keys, key, self.num_buckets)
+        if not buckets:
+            return keys, None
+        if self.collect_metrics:
+            rb, tb = index.pruned_bytes(buckets, batch_id)
+            # sidecars are read AND part of the index footprint — charge
+            # them to both sides of the accounting
+            sb = index.sidecar_bytes(batch_id)
+            self._metrics["index_read_bytes"] += rb + sb
+            self._metrics["index_total_bytes"] += tb + sb
+        return keys, index.read_pruned(keys.sparkSession, buckets, batch_id)
+
+    def write_batch(self, df: DataFrame, batch_id: int) -> None:
+        if self.is_committed(batch_id):
+            return  # replayed micro-batch → exactly-once no-op
+        self._cached: list[DataFrame] = []
+        self._metrics = {"batch_id": batch_id, "index_read_bytes": 0, "index_total_bytes": 0}
+        try:
+            batch, drops = self._dedup(self._cache(self._enrich(df)), batch_id)
+            survivors = batch.join(drops.distinct(), on=self._row_id, how="left_anti")
+            tables = self._index_rows(batch)
+
+            def write_index() -> None:
+                for idx, rows, key in tables:
+                    idx.write(rows, F.col(key), batch_id)
+
+            self._commit_batch(self._emit(survivors), batch_id, write_index)
+            if self.collect_metrics:
+                self.batch_metrics.append(self._metrics)
+                del self.batch_metrics[:-_METRICS_CAP]
+            if self.compact_every and (batch_id + 1) % self.compact_every == 0:
+                done = set(self.committed_batches())
+                for idx, _, _ in tables:
+                    idx.compact(df.sparkSession, done)
+        finally:
+            for cached in self._cached:
+                cached.unpersist()
+
+    def read(self, spark: SparkSession, latest_only: bool = True) -> DataFrame:
+        """The survivors so far: the union of committed batch outputs.
+        Survivors are append-only (a new row can never retro-drop an
+        already-emitted one), so the union IS the result."""
+        return super().read(spark, latest_only=False)
+
+
+def _explode_bands(d: DataFrame, id_alias: str) -> DataFrame:
+    """(id_alias, band, band_hash) rows of a ``bands`` column."""
+    return d.select(F.col("doc_id").alias(id_alias), F.explode("bands").alias("b")).select(
+        id_alias, F.col("b.band").alias("band"), F.col("b.band_hash").alias("band_hash")
+    )
+
+
+class StreamingCorpusCleaner(_IncrementalDedupSink):
     """foreachBatch dedup tier: exact + LSH near-dup dedup of each
     micro-batch against the accumulated corpus index, exactly-once.
     Index reads are partition-pruned (see module docstring).
 
     ``read(spark)`` returns the curated corpus so far
     (doc_id, fp_int, ws_tokens)."""
+
+    _row_id = "doc_id"
 
     def __init__(
         self,
@@ -756,9 +856,7 @@ class StreamingCorpusCleaner(ExactlyOnceParquetSink):
         collect_metrics: bool = False,
         compact_every: int | None = None,
     ):
-        super().__init__(path)
-        from ..functions.dedup import _check_banding
-
+        super().__init__(path, num_buckets, collect_metrics, compact_every)
         _check_banding(num_hashes, num_bands)
         self.id_col = id_col
         self.text_col = text_col
@@ -771,7 +869,6 @@ class StreamingCorpusCleaner(ExactlyOnceParquetSink):
         #: DuckDB-oracle-reproducible (the gates pass it explicitly —
         #: see functions.dedup for the tradeoff)
         self.hash_fn = hash_fn
-        self.num_buckets = num_buckets
         #: every exact-deduped doc ever seen — near-dup drops compare
         #: against ALL of them (batch parity: a doc dropped as a
         #: near-dup still drops later docs similar to it), not just
@@ -806,25 +903,7 @@ class StreamingCorpusCleaner(ExactlyOnceParquetSink):
             # of candidate ids in _gram_lut) — a Bloom adds nothing
             build_blooms=False,
         )
-        #: per-committed-batch observability (driver-side, appended by
-        #: write_batch when ``collect_metrics``): index bytes the
-        #: pruned reads touched vs the whole index — the direct
-        #: pruning-effectiveness series the long-horizon bench records.
-        #: OPT-IN: the measurement stats O(batches × num_buckets) files
-        #: per batch (a metadata-RPC storm on object stores), so a
-        #: production stream pays nothing unless asked; the list is
-        #: also capped (rolling) so a long stream cannot grow it
-        #: unboundedly.
-        self.collect_metrics = collect_metrics
-        self.batch_metrics: list[dict] = []
-        #: auto-compaction cadence: every N committed batches the index
-        #: tables merge their batch dirs (file listing back to
-        #: O(num_buckets)); runs AFTER the commit marker, so a crash
-        #: mid-compaction replays as a no-op and the sentinel makes a
-        #: partial swap refuse loudly. None = manual compact_index only.
-        self.compact_every = compact_every
 
-    # -- per-batch enrichment (one Catalyst pass) -------------------------
     def _enrich(self, batch: DataFrame) -> DataFrame:
         """(doc_id, text, fp, bands) — deliberately WITHOUT verify-gram
         arrays: Catalyst gram generation is ~95% of the signature-path
@@ -832,8 +911,12 @@ class StreamingCorpusCleaner(ExactlyOnceParquetSink):
         grams (the :func:`~dataflows_spark.functions.dedup.
         jaccard_pairs` candidate-only discipline; grams attach later
         via :meth:`_gram_lut`)."""
-        from ..functions.dedup import arrow_minhash_udf
-
+        # a micro-batch arrives with as many partitions as SOURCE FILES
+        # (often 1) — without a repartition the expression-heavy
+        # enrichment runs on 1-2 cores (measured 73 s vs 3 s per 15k-doc
+        # batch at 32 cores; the same single-file pitfall with_minhash
+        # guards against)
+        batch = batch.repartition(batch.sparkSession.sparkContext.defaultParallelism)
         if self.hash_fn == "arrow":
             # the source column, NOT the post-select alias "text" — this
             # select computes every expression against the raw batch
@@ -860,258 +943,116 @@ class StreamingCorpusCleaner(ExactlyOnceParquetSink):
             g, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
         )
 
-    #: candidate-id lists at or under this size are collected and pushed
-    #: into the scan as an In filter (see _gram_lut); above it, the
-    #: semi-join fallback. Must stay ≤ the session's parquet
-    #: inFilterThreshold or Spark degrades the pushdown to a min/max
-    #: range, which skips nothing for scattered ids.
-    _LUT_PUSHDOWN_CAP = 1000
-
     def _gram_lut(self, docs: DataFrame, ids: DataFrame) -> DataFrame:
         """(doc_id, grams) for ONLY the ids present in candidate pairs —
-        gram generation cost is O(candidates), not O(batch)/O(corpus).
-
-        IO discipline: banding keeps candidate sets small (measured
-        10-40 distinct ids per 5k-doc batch on the sf1 corpus), but the
-        doc-TEXT index is the fat table, and a hash-bucketed id set of
-        even ~30 ids touches most buckets — so bucket pruning alone
-        still scans ~the whole text corpus per batch (the 24-batch
-        read-bytes series showed exactly that linear growth). Each
-        index id lives in exactly ONE file of one batch dir, so a
-        collected id list pushed as an ``In`` scan filter lets parquet
-        row-group stats skip every file holding no candidate: doc-text
-        IO becomes O(candidates) regardless of corpus size. The collect
-        is bounded by ``_LUT_PUSHDOWN_CAP`` (a driver list of ≤1000
-        longs); bigger candidate sets fall back to the left-semi
-        join."""
-        id_rows = [
-            r[0] for r in ids.distinct().limit(self._LUT_PUSHDOWN_CAP + 1).collect()
-        ]
-        sel = docs.select("doc_id", "text")
-        if len(id_rows) <= self._LUT_PUSHDOWN_CAP:
-            sel = sel.filter(F.col("doc_id").isin(id_rows))
-        else:
-            sel = sel.join(ids.distinct(), on="doc_id", how="left_semi")
+        gram generation cost is O(candidates), not O(batch)/O(corpus),
+        and doc-text IO O(candidates) too (see :func:`_candidate_rows`)."""
+        sel = _candidate_rows(docs.select("doc_id", "text"), ids, "doc_id")
         return sel.select("doc_id", self._ghash(F.col("text")).alias("grams"))
 
-    def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        if self.is_committed(batch_id):
-            return  # replayed micro-batch → exactly-once no-op
-        spark = df.sparkSession
-        # a micro-batch arrives with as many partitions as SOURCE FILES
-        # (often 1) — without a repartition the expression-heavy
-        # enrichment runs on 1-2 cores (measured 73 s vs 3 s per 15k-doc
-        # batch at 32 cores; the same single-file pitfall with_minhash
-        # guards against)
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-        # one enrichment pass; reused by the exact tier, both LSH joins
-        # and the final emit — cache instead of recomputing 4×
-        enriched = self._enrich(df).cache()
-        # materialize-once frames use cache(), NOT localCheckpoint():
-        # a localCheckpoint persists its internal RDD OUTSIDE the
-        # CacheManager, so Dataset.unpersist() cannot release it and
-        # the blocks linger until JVM GC + ContextCleaner get around
-        # to it — on an unbounded stream they accumulate per batch,
-        # squeeze execution memory and throttle the whole session
-        # (measured: 8 s/batch in a fresh session vs 60 s/batch 13
-        # batches into the stream, CPU idle, all iowait/spill). The
-        # per-batch plans are shallow, so lineage truncation — the one
-        # thing localCheckpoint adds — buys nothing here. Every cached
-        # frame is unpersisted at batch end.
-        ephemeral: list[DataFrame] = []
-        try:
-            # exact tier: first-seen per fingerprint within the batch...
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("fp").orderBy(F.col("doc_id"))
-            batch_pre = (
-                enriched.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            ).cache()
-            # released in the finally with the other per-batch frames —
-            # an exception mid-batch (or a foreachBatch retry) must not
-            # leak its cached blocks (unpersist is idempotent)
-            ephemeral.append(batch_pre)
-            batch_docs = batch_pre
-            m = {"batch_id": batch_id, "index_read_bytes": 0, "index_total_bytes": 0}
-            have_index = self._bands.exists()
-            if have_index:
-                # ...then against every fingerprint already seen. Bloom
-                # screen FIRST: only fps that MIGHT be indexed (true
-                # dups + ~0.06% false positives, verified exactly by the
-                # join below) proceed, so both the pruned read and the
-                # join stay O(batch + matches) even when the batch's
-                # distinct keys ≫ num_buckets — the regime where bucket
-                # pruning alone reads the whole index (sf10 measured
-                # per-batch time growing linearly before this screen;
-                # see streaming/bloom.py). A sidecar-less (pre-Bloom)
-                # index screens nothing and takes the old full path.
-                keys = self._fps.screen_keys(
-                    batch_pre.select("doc_id", "fp"), F.col("fp"), batch_id
-                )
-                sus = (keys if keys is not None else batch_pre.select("doc_id", "fp")).cache()
-                ephemeral.append(sus)
-                fp_buckets = _touched_buckets(sus, F.col("fp"), self.num_buckets)
-                if fp_buckets:
-                    if self.collect_metrics:
-                        rb, tb = self._fps.pruned_bytes(fp_buckets, batch_id)
-                        sb = self._fps.sidecar_bytes(batch_id)
-                        # sidecars are read AND part of the index footprint —
-                        # charge them to both sides of the accounting
-                        m["index_read_bytes"] += rb + sb
-                        m["index_total_bytes"] += tb + sb
-                    seen_fps = self._fps.read_pruned(spark, fp_buckets, batch_id)
-                    confirmed = sus.join(
-                        seen_fps.select("fp").distinct(), on="fp", how="left_semi"
-                    ).select("doc_id")
-                    batch_docs = batch_pre.join(confirmed, on="doc_id", how="left_anti")
-            if batch_docs is not batch_pre:  # already cached above otherwise
-                batch_docs = batch_docs.cache()
-                ephemeral.append(batch_docs)
-
-            # LSH tier: band-exploded equi-joins — batch×batch and
-            # batch×index; the bucketed shape, never a cross product.
-            # Candidates stay NARROW (id pairs) through the distinct;
-            # gram arrays are computed for CANDIDATE ids only and join
-            # back by id for the verify (the batch flagship's shape)
-            def explode_bands(d: DataFrame, id_alias: str) -> DataFrame:
-                return d.select(F.col("doc_id").alias(id_alias), F.explode("bands").alias("b")).select(
-                    id_alias, F.col("b.band").alias("band"), F.col("b.band_hash").alias("band_hash")
-                )
-
-            def verify(cands: DataFrame, lut_a: DataFrame, lut_b: DataFrame) -> DataFrame:
-                return (
-                    cands.join(
-                        lut_a.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("ga")),
-                        on="id_a",
-                    )
-                    .join(
-                        lut_b.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("gb")),
-                        on="id_b",
-                    )
-                    .withColumn("j", jaccard(F.col("ga"), F.col("gb")))
-                    .filter(F.col("j") >= self.jaccard_threshold)
-                )
-
-            new_b = explode_bands(batch_docs, "id_b")
-            # within-batch pairs: id-ordered (keep the lower id).
-            # Materialized once — consumed by the batch gram-lut
-            # semi-join and the verify
-            within = (
-                explode_bands(batch_docs, "id_a")
-                .join(new_b, on=["band", "band_hash"])
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b")
-                .distinct()
-                .cache()
+    def _verify(self, cands: DataFrame, lut_a: DataFrame, lut_b: DataFrame) -> DataFrame:
+        """Candidate pairs whose exact gram Jaccard passes the threshold."""
+        return (
+            cands.join(
+                lut_a.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("ga")),
+                on="id_a",
             )
-            ephemeral.append(within)
-            cross = None
-            if have_index:
-                # cross-index pairs: the batch side (id_b) drops
-                # UNCONDITIONALLY on a verified match — no id ordering
-                # (first-seen-wins under out-of-order arrival). Bloom
-                # screen the batch's band rows first (same rationale as
-                # the fp screen above: a band hash that fails every
-                # bloom cannot equi-join the index, so only suspects —
-                # near-dup collisions + the FP residue — reach the join
-                # and the pruned read); then prune to the SUSPECTS' band
-                # buckets. band_hash alone keys the screen — a superset
-                # of the (band, band_hash) join key, conservative.
-                sus_b = self._bands.screen_keys(new_b, F.col("band_hash"), batch_id)
-                sus_b = (sus_b if sus_b is not None else new_b).cache()
-                ephemeral.append(sus_b)
-                band_buckets = _touched_buckets(sus_b, F.col("band_hash"), self.num_buckets)
-                if band_buckets:
-                    if self.collect_metrics:
-                        rb, tb = self._bands.pruned_bytes(band_buckets, batch_id)
-                        sb = self._bands.sidecar_bytes(batch_id)
-                        # sidecars are read AND part of the index footprint —
-                        # charge them to both sides of the accounting
-                        m["index_read_bytes"] += rb + sb
-                        m["index_total_bytes"] += tb + sb
-                    seen_bands = self._bands.read_pruned(spark, band_buckets, batch_id).select(
-                        F.col("doc_id").alias("id_a"), "band", "band_hash"
-                    )
-                    cross = (
-                        seen_bands.join(sus_b, on=["band", "band_hash"])
-                        .select("id_a", "id_b")
-                        .distinct()
-                        # consumed by the doc-bucket collect, the index
-                        # gram lut and the verify — materialize once
-                        .cache()
-                    )
-                    ephemeral.append(cross)
-            # candidate-only gram luts: batch side covers every id a
-            # candidate pair touches in THIS batch; index side reads the
-            # (doc_id, text) index pruned to the cross id_a buckets
-            batch_cand_ids = within.select(F.col("id_a").alias("doc_id")).unionByName(
-                within.select(F.col("id_b").alias("doc_id"))
+            .join(
+                lut_b.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("gb")),
+                on="id_b",
             )
-            if cross is not None:
-                batch_cand_ids = batch_cand_ids.unionByName(
-                    cross.select(F.col("id_b").alias("doc_id"))
+            .withColumn("j", jaccard(F.col("ga"), F.col("gb")))
+            .filter(F.col("j") >= self.jaccard_threshold)
+        )
+
+    def _dedup(self, enriched: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
+        # exact tier: first-seen per fingerprint within the batch...
+        w = Window.partitionBy("fp").orderBy(F.col("doc_id"))
+        batch_pre = self._cache(
+            enriched.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+        batch_docs = batch_pre
+        have_index = self._bands.exists()
+        if have_index:
+            # ...then against every fingerprint already seen
+            sus, seen_fps = self._probe(self._fps, batch_pre.select("doc_id", "fp"), "fp", batch_id)
+            if seen_fps is not None:
+                confirmed = sus.join(
+                    seen_fps.select("fp").distinct(), on="fp", how="left_semi"
+                ).select("doc_id")
+                batch_docs = self._cache(batch_pre.join(confirmed, on="doc_id", how="left_anti"))
+
+        # LSH tier: band-exploded equi-joins — batch×batch and
+        # batch×index; the bucketed shape, never a cross product.
+        # Candidates stay NARROW (id pairs) through the distinct; gram
+        # arrays are computed for CANDIDATE ids only and join back by id
+        # for the verify (the batch flagship's shape)
+        new_b = _explode_bands(batch_docs, "id_b")
+        # within-batch pairs: id-ordered (keep the lower id).
+        # Materialized once — consumed by the batch gram-lut semi-join
+        # and the verify
+        within = self._cache(
+            _explode_bands(batch_docs, "id_a")
+            .join(new_b, on=["band", "band_hash"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+        )
+        cross = None
+        if have_index:
+            # cross-index pairs: the batch side (id_b) drops
+            # UNCONDITIONALLY on a verified match — no id ordering
+            # (first-seen-wins under out-of-order arrival). band_hash
+            # alone keys the screen — a superset of the (band,
+            # band_hash) join key, conservative.
+            sus_b, seen_bands = self._probe(self._bands, new_b, "band_hash", batch_id)
+            if seen_bands is not None:
+                # consumed by the doc-bucket collect, the index gram lut
+                # and the verify — materialize once
+                cross = self._cache(
+                    seen_bands.select(F.col("doc_id").alias("id_a"), "band", "band_hash")
+                    .join(sus_b, on=["band", "band_hash"])
+                    .select("id_a", "id_b")
+                    .distinct()
                 )
-            # the lut feeds BOTH sides of the within-verify and the gb
-            # side of the cross-verify — materialize so the candidate
-            # gram hashing + semi-join run once, not 2-3× (the same
-            # reason jaccard_pairs checkpoints its enrichment)
-            batch_lut = self._gram_lut(batch_docs, batch_cand_ids).cache()
-            ephemeral.append(batch_lut)
-            drops = verify(within, batch_lut, batch_lut).select("id_b")
-            if cross is not None:
-                doc_buckets = _touched_buckets(cross, F.col("id_a"), self.num_buckets)
-                if doc_buckets:
-                    if self.collect_metrics:
-                        rb, tb = self._docs.pruned_bytes(doc_buckets, batch_id)
-                        m["index_read_bytes"] += rb
-                        m["index_total_bytes"] += tb
-                    seen_docs = self._docs.read_pruned(spark, doc_buckets, batch_id)
-                    index_lut = self._gram_lut(
-                        seen_docs, cross.select(F.col("id_a").alias("doc_id"))
-                    )
-                    drops = drops.unionByName(verify(cross, index_lut, batch_lut).select("id_b"))
-            drop = drops.select(F.col("id_b").alias("doc_id")).distinct()
-            survivors = batch_docs.join(drop, on="doc_id", how="left_anti")
+        # candidate-only gram luts: batch side covers every id a
+        # candidate pair touches in THIS batch; index side reads the
+        # (doc_id, text) index pruned to the cross id_a buckets
+        batch_cand_ids = within.select(F.col("id_a").alias("doc_id")).unionByName(
+            within.select(F.col("id_b").alias("doc_id"))
+        )
+        if cross is not None:
+            batch_cand_ids = batch_cand_ids.unionByName(cross.select(F.col("id_b").alias("doc_id")))
+        # the lut feeds BOTH sides of the within-verify and the gb side
+        # of the cross-verify — materialize so the candidate gram
+        # hashing + semi-join run once, not 2-3×
+        batch_lut = self._cache(self._gram_lut(batch_docs, batch_cand_ids))
+        drops = self._verify(within, batch_lut, batch_lut).select("id_b")
+        if cross is not None:
+            _, seen_docs = self._probe(self._docs, cross, "id_a", batch_id)
+            if seen_docs is not None:
+                index_lut = self._gram_lut(seen_docs, cross.select(F.col("id_a").alias("doc_id")))
+                drops = drops.unionByName(self._verify(cross, index_lut, batch_lut).select("id_b"))
+        return batch_docs, drops.select(F.col("id_b").alias("doc_id"))
 
-            # emit + persist index, then the atomic marker commits the
-            # batch; a crash in between replays into idempotent ops
-            # (overwrite of the same batch dirs)
-            target = os.path.join(self.data_dir, f"batch_id={batch_id}")
-            survivors.select(
-                "doc_id",
-                F.conv(F.substring("fp", 1, 15), 16, 10).cast("bigint").alias("fp_int"),
-                txt.ws_token_count("text").cast("long").alias("ws_tokens"),
-            ).write.mode("overwrite").options(**V2_COMMITTER).parquet(target)
-            self._fps.write(batch_docs.select("fp"), F.col("fp"), batch_id)
-            self._bands.write(
-                explode_bands(batch_docs, "doc_id"), F.col("band_hash"), batch_id
-            )
-            self._docs.write(batch_docs.select("doc_id", "text"), F.col("doc_id"), batch_id)
-            from .sink import _atomic_write
+    def _index_rows(self, batch: DataFrame) -> list[tuple[_BucketedIndex, DataFrame, str]]:
+        return [
+            (self._fps, batch.select("fp"), "fp"),
+            (self._bands, _explode_bands(batch, "doc_id"), "band_hash"),
+            (self._docs, batch.select("doc_id", "text"), "doc_id"),
+        ]
 
-            _atomic_write(self._commit_marker(batch_id), {"batch_id": batch_id})
-            if self.collect_metrics:
-                self.batch_metrics.append(m)
-                del self.batch_metrics[:-_METRICS_CAP]
-            if self.compact_every and (batch_id + 1) % self.compact_every == 0:
-                done = set(self.committed_batches())
-                for idx in (self._fps, self._bands, self._docs):
-                    idx.compact(spark, done)
-        finally:
-            for cp in ephemeral:
-                cp.unpersist()
-            enriched.unpersist()
-
-    def read(self, spark: SparkSession, latest_only: bool = True) -> DataFrame:
-        """The curated corpus so far: union of committed batch outputs.
-        Survivors are append-only (a new doc can never retro-drop an
-        already-emitted one), so the union IS the result."""
-        return super().read(spark, latest_only=False)
+    def _emit(self, survivors: DataFrame) -> DataFrame:
+        return survivors.select(
+            "doc_id",
+            F.conv(F.substring("fp", 1, 15), 16, 10).cast("bigint").alias("fp_int"),
+            txt.ws_token_count("text").cast("long").alias("ws_tokens"),
+        )
 
 
-class StreamingEmbeddingDeduper(ExactlyOnceParquetSink):
+class StreamingEmbeddingDeduper(_IncrementalDedupSink):
     """The same incremental-dedup shape over the EMBEDDING modality:
     each micro-batch of (id, vector) rows is near-dup-deduped against
     the accumulated corpus via a hyperplane-LSH signature EQUI-join
@@ -1122,11 +1063,8 @@ class StreamingEmbeddingDeduper(ExactlyOnceParquetSink):
     id-ordered arrival the result matches the batch
     ``lsh_neardup_pairs`` drop rule row-exactly — the driver gate's
     oracle. The index is partitioned by ``sb = pmod(xxhash64(sig),
-    num_buckets)`` and every per-batch read prunes to the batch's own
-    signature buckets plus ``batch_id != current`` (replay safety) —
-    per-batch read cost O(touched_buckets × corpus / num_buckets),
-    write cost O(batch), replay and half-failure converge (same
-    protocol as :class:`StreamingCorpusCleaner`).
+    num_buckets)``, so every per-batch read prunes to the batch's own
+    signature buckets.
 
     SIZE ``bits`` TO THE CORPUS: candidate-verify work per batch is
     O(index × batch / 2^bits) for non-duplicate vectors, so the bucket
@@ -1148,7 +1086,7 @@ class StreamingEmbeddingDeduper(ExactlyOnceParquetSink):
         collect_metrics: bool = False,
         compact_every: int | None = None,
     ):
-        super().__init__(path)
+        super().__init__(path, num_buckets, collect_metrics, compact_every)
         if dim is None:
             raise ValueError("pass dim= explicitly (the scale path never infers it per batch)")
         self.id_col = id_col
@@ -1157,7 +1095,6 @@ class StreamingEmbeddingDeduper(ExactlyOnceParquetSink):
         self.dim = dim
         self.bits = bits
         self.seed = seed
-        self.num_buckets = num_buckets
         self._index = _BucketedIndex(
             os.path.join(path, "state", "index"),
             "sb",
@@ -1167,138 +1104,65 @@ class StreamingEmbeddingDeduper(ExactlyOnceParquetSink):
             # family — refuse a resume that would silently join nothing
             {"dim": dim, "bits": bits, "seed": seed},
         )
-        #: same opt-in pruning-effectiveness series as
-        #: StreamingCorpusCleaner (off by default; rolling cap)
-        self.collect_metrics = collect_metrics
-        self.batch_metrics: list[dict] = []
-        #: same auto-compaction cadence as StreamingCorpusCleaner
-        self.compact_every = compact_every
 
-    def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        from ..functions.similarity import cosine_sim, lsh_signature
-
-        if self.is_committed(batch_id):
-            return
-        spark = df.sparkSession
+    def _enrich(self, df: DataFrame) -> DataFrame:
         # single-file micro-batches → repartition before the signature
-        # expressions (see StreamingCorpusCleaner.write_batch)
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-        enriched = df.select(
+        # expressions (see StreamingCorpusCleaner._enrich)
+        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        return df.select(
             F.col(self.id_col).alias("id"),
             F.col(self.vec_col).cast("array<double>").alias("v"),
         ).withColumn("sig", lsh_signature("v", self.dim, self.bits, self.seed))
-        enriched = enriched.cache()
-        # per-batch materialize-once blocks must not outlive the batch
-        # on an unbounded stream (see StreamingCorpusCleaner.write_batch
-        # for why cache()+unpersist, not localCheckpoint)
-        ephemeral: list[DataFrame] = []
-        try:
-            def verified_drops(cand: DataFrame) -> DataFrame:
-                return (
-                    cand.withColumn("cos", cosine_sim(F.col("va"), F.col("vb")))
-                    .filter(F.col("cos") >= self.threshold)
-                    .select(F.col("id_b").alias("id"))
-                )
 
-            # within-batch pairs: keep the lower id
-            within = (
-                enriched.select(F.col("id").alias("id_a"), F.col("v").alias("va"), "sig")
-                .join(
-                    enriched.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), "sig"),
-                    on="sig",
-                )
-                .filter(F.col("id_a") < F.col("id_b"))
+    def _verified_drops(self, cand: DataFrame) -> DataFrame:
+        return (
+            cand.withColumn("cos", cosine_sim(F.col("va"), F.col("vb")))
+            .filter(F.col("cos") >= self.threshold)
+            .select(F.col("id_b").alias("id"))
+        )
+
+    def _dedup(self, enriched: DataFrame, batch_id: int) -> tuple[DataFrame, DataFrame]:
+        # within-batch pairs: keep the lower id
+        within = (
+            enriched.select(F.col("id").alias("id_a"), F.col("v").alias("va"), "sig")
+            .join(
+                enriched.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), "sig"),
+                on="sig",
             )
-            drops = verified_drops(within)
-            m = {"batch_id": batch_id, "index_read_bytes": 0, "index_total_bytes": 0}
-            if self._index.exists():
-                # cross-index pairs: the batch side (id_b) drops on a
-                # verified match with NO id ordering — an index-vs-batch
-                # pair where the batch id happens to be lower must still
-                # drop the batch vector (first-seen wins; the round-3
-                # advisor's out-of-order duplicate leak)
-                # Bloom screen: only batch sigs that MIGHT be indexed
-                # (sign-pattern collisions + the FP residue) enter the
-                # sig equi-join — the narrow (id, sig) index exchange
-                # stops being O(index) per batch once batch keys ≫
-                # num_buckets (see streaming/bloom.py; the exact-cosine
-                # verify already re-checks every candidate)
-                sus_s = self._index.screen_keys(
-                    enriched.select("id", "sig"), F.col("sig"), batch_id
+            .filter(F.col("id_a") < F.col("id_b"))
+        )
+        drops = self._verified_drops(within)
+        if self._index.exists():
+            # cross-index pairs: the batch side (id_b) drops on a
+            # verified match with NO id ordering — an index-vs-batch
+            # pair where the batch id happens to be lower must still
+            # drop the batch vector (first-seen wins)
+            sus_s, seen = self._probe(self._index, enriched.select("id", "sig"), "sig", batch_id)
+            if seen is not None:
+                # the sig equi-join exchanges NARROW (id, sig) rows on
+                # the index side and runs ONCE: candidate pairs (tiny by
+                # the bits sizing rule) are cached for the id collect
+                # AND the verify join
+                cand = self._cache(
+                    seen.select(F.col("id").alias("id_a"), "sig")
+                    .join(sus_s.select(F.col("id").alias("id_b"), "sig"), on="sig")
+                    .select("id_a", "id_b")
                 )
-                sus_s = (sus_s if sus_s is not None else enriched.select("id", "sig")).cache()
-                ephemeral.append(sus_s)
-                sig_buckets = _touched_buckets(sus_s, F.col("sig"), self.num_buckets)
-                if sig_buckets:
-                    if self.collect_metrics:
-                        rb, tb = self._index.pruned_bytes(sig_buckets, batch_id)
-                        sb = self._index.sidecar_bytes(batch_id)
-                        # sidecars are read AND part of the index footprint —
-                        # charge them to both sides of the accounting
-                        m["index_read_bytes"] += rb + sb
-                        m["index_total_bytes"] += tb + sb
-                    # the sig equi-join exchanges NARROW (id, sig) rows
-                    # on the index side; index vectors re-attach by id
-                    # only for the verify (the lsh_neardup_pairs shuffle
-                    # discipline). The batch side keeps its vectors
-                    # inline — it is one micro-batch, broadcast-sized.
-                    seen = self._index.read_pruned(spark, sig_buckets, batch_id)
-                    # the narrow (id, sig) sig join runs ONCE: candidate
-                    # PAIRS materialize once via cache() —
-                    # O(candidates) rows of two ids, tiny by the bits
-                    # sizing rule — and are reused for the id-collect
-                    # AND the verify join (the lazy plan re-ran the
-                    # pruned index scan for each; `seen` itself stays
-                    # lazy, only its narrow columns are ever read here)
-                    cand = (
-                        seen.select(F.col("id").alias("id_a"), "sig")
-                        .join(sus_s.select(F.col("id").alias("id_b"), "sig"), on="sig")
-                        .select("id_a", "id_b")
-                        .cache()
-                    )
-                    ephemeral.append(cand)
-                    # vectors re-attach for ONLY the candidate ids: sig
-                    # collisions are rare (bits sized to the corpus), so
-                    # the id list is tiny — pushed as an In scan filter,
-                    # parquet row-group stats skip every index file with
-                    # no candidate and the fat vector column's per-batch
-                    # IO stays O(candidates), not O(touched index). The
-                    # same discipline (and cap) as the cleaner's
-                    # _gram_lut doc-text lookup.
-                    cap = StreamingCorpusCleaner._LUT_PUSHDOWN_CAP
-                    cand_ids = [
-                        r[0] for r in cand.select("id_a").distinct().limit(cap + 1).collect()
-                    ]
-                    vecs = seen.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-                    if len(cand_ids) <= cap:
-                        vecs = vecs.filter(F.col("id_a").isin(cand_ids))
-                    # batch-side vectors re-attach from the CACHED
-                    # enriched frame (one micro-batch, memory-resident)
-                    cross = cand.join(vecs, on="id_a").join(
-                        enriched.select(F.col("id").alias("id_b"), F.col("v").alias("vb")),
-                        on="id_b",
-                    )
-                    drops = drops.unionByName(verified_drops(cross))
-            survivors = enriched.join(drops.distinct(), on="id", how="left_anti")
-            target = os.path.join(self.data_dir, f"batch_id={batch_id}")
-            survivors.select(F.col("id").alias(self.id_col)).write.mode("overwrite").options(
-                **V2_COMMITTER
-            ).parquet(target)
-            # ALL batch rows enter the index (a dropped vector still
-            # drops later near-dups of it — batch drop-rule parity)
-            self._index.write(enriched.select("id", "v", "sig"), F.col("sig"), batch_id)
-            from .sink import _atomic_write
+                # index vectors re-attach for ONLY the candidate ids;
+                # batch-side vectors from the cached enriched frame
+                vecs = _candidate_rows(
+                    seen.select(F.col("id").alias("id_a"), F.col("v").alias("va")),
+                    cand.select("id_a"),
+                    "id_a",
+                )
+                cross = cand.join(vecs, on="id_a").join(
+                    enriched.select(F.col("id").alias("id_b"), F.col("v").alias("vb")),
+                    on="id_b",
+                )
+                drops = drops.unionByName(self._verified_drops(cross))
+        return enriched, drops
 
-            _atomic_write(self._commit_marker(batch_id), {"batch_id": batch_id})
-            if self.collect_metrics:
-                self.batch_metrics.append(m)
-                del self.batch_metrics[:-_METRICS_CAP]
-            if self.compact_every and (batch_id + 1) % self.compact_every == 0:
-                self._index.compact(spark, set(self.committed_batches()))
-        finally:
-            for cp in ephemeral:
-                cp.unpersist()
-            enriched.unpersist()
-
-    def read(self, spark: SparkSession, latest_only: bool = True) -> DataFrame:
-        return super().read(spark, latest_only=False)
+    def _index_rows(self, batch: DataFrame) -> list[tuple[_BucketedIndex, DataFrame, str]]:
+        # ALL batch rows enter the index (a dropped vector still drops
+        # later near-dups of it — batch drop-rule parity)
+        return [(self._index, batch.select("id", "v", "sig"), "sig")]

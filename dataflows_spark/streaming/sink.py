@@ -31,7 +31,8 @@ import os
 import uuid
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import functions as F
 
 from ..sources.table import SnapshotTable, iceberg_available
 
@@ -41,6 +42,11 @@ def _atomic_write(path: str, payload: dict) -> None:
     with open(tmp, "w") as fh:
         json.dump(payload, fh)
     os.rename(tmp, path)
+
+
+def committed_ids(commit_dir: str) -> list[int]:
+    """Sorted batch ids of the commit markers in a ``_commits`` dir."""
+    return sorted(int(f.split(".")[0]) for f in os.listdir(commit_dir) if f.endswith(".json"))
 
 
 #: FileOutputCommitter v2 as a PER-WRITE option, scoped to the
@@ -83,17 +89,24 @@ class ExactlyOnceParquetSink:
             return  # replayed micro-batch → exactly-once no-op
         if self.dedup_keys:
             df = df.dropDuplicates(self.dedup_keys)
-        target = os.path.join(self.data_dir, f"batch_id={batch_id}")
-        # row count for the marker rides the write itself via observe —
-        # a separate df.count() would re-evaluate the whole micro-batch
-        # (2× decode cost in the hot sink path)
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
+        self._commit_batch(df, batch_id)
 
+    def _commit_batch(
+        self, df: DataFrame, batch_id: int, before_marker: Callable[[], None] | None = None
+    ) -> None:
+        """Write ``df`` as the ``batch_id=N`` data dir, run
+        ``before_marker`` (further side effects of the batch, which a
+        crash before the marker replays), then commit with the atomic
+        marker. The marker's row count rides the write itself via
+        observe — a separate df.count() would re-evaluate the whole
+        micro-batch (2× decode cost in the hot sink path)."""
+        target = os.path.join(self.data_dir, f"batch_id={batch_id}")
         obs = Observation(f"sink_batch_{batch_id}")
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").options(
             **V2_COMMITTER
         ).parquet(target)
+        if before_marker is not None:
+            before_marker()
         _atomic_write(
             self._commit_marker(batch_id), {"batch_id": batch_id, "rows": obs.get.get("rows", 0)}
         )
@@ -103,9 +116,7 @@ class ExactlyOnceParquetSink:
         self.write_batch(df, batch_id)
 
     def committed_batches(self) -> list[int]:
-        return sorted(
-            int(f.split(".")[0]) for f in os.listdir(self.commit_dir) if f.endswith(".json")
-        )
+        return committed_ids(self.commit_dir)
 
     def read(self, spark: SparkSession, latest_only: bool = True) -> DataFrame:
         """Union of committed batches. Under ``outputMode('update')`` an
@@ -120,9 +131,6 @@ class ExactlyOnceParquetSink:
         paths = [os.path.join(self.data_dir, f"batch_id={b}") for b in committed]
         df = spark.read.option("basePath", self.data_dir).parquet(*paths)
         if self.dedup_keys and latest_only:
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
-
             w = Window.partitionBy(*self.dedup_keys).orderBy(F.col("batch_id").desc())
             df = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
         return df.drop("batch_id")

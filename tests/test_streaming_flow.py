@@ -785,11 +785,17 @@ def test_streaming_gram_lut_pushes_candidate_ids_to_scan(spark, tmp_path):
     assert "PushedFilters: [In(doc_id" in plan
     assert lut.count() == 3
 
-    # past the cap → semi-join (no giant literal list in the plan)
-    c._LUT_PUSHDOWN_CAP = 2
-    lut2 = c._gram_lut(seen, ids)
-    assert "In(doc_id" not in lut2._jdf.queryExecution().executedPlan().toString()
-    assert lut2.count() == 3
+    # past the cap (the session's In-pushdown threshold) → semi-join
+    # (no giant literal list in the plan)
+    key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        lut2 = c._gram_lut(seen, ids)
+        assert "In(doc_id" not in lut2._jdf.queryExecution().executedPlan().toString()
+        assert lut2.count() == 3
+    finally:
+        spark.conf.set(key, threshold)
 
     # empty candidate set → empty result, no error
     assert c._gram_lut(seen, ids.limit(0)).count() == 0
