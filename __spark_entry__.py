@@ -1262,7 +1262,7 @@ _DOCS_WITH_DUPS = (
 )
 
 # K≤4 fast path: one md5 per gram, sliced into 8-hex (32-bit) values
-# (mirrors functions/dedup.py::with_minhash)
+# (mirrors functions/dedup.py::minhash_sig)
 _MINHASH_H = "list_min([CAST(concat('0x', substr(md5(g), {off}, 8)) AS BIGINT) for g in grams])"
 
 

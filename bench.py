@@ -32,7 +32,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 _SF_FROM_DIR = {"sf0.001": 0.001, "sf0.01": 0.01, "sf0.1": 0.1}
 SF = _SF_FROM_DIR.get(os.path.basename(SF_DIR.rstrip("/")), 0.1)
@@ -470,28 +470,13 @@ def ensure_sf1(spark) -> None:
     _ensure_doc_corpus(spark, SF1_N, SF1_DOCS_PATH, SF1_EMB_PATH)
 
 
-def run_audio_neardup_tier(n: int | None = None) -> dict:
-    """Audio near-dup fingerprinting (functions/audio_fp.py) end to
-    end at bench scale: n base clips (mixed codecs, 1-3 s) + 5%
-    planted distortions (decode → re-encode ulaw + 0.9× gain, fresh
-    ids) → full candidate→verify pipeline. Reports wall-clock, pair
-    count and PLANTED RECALL (every planted copy must pair with its
-    original — recall is the correctness check the pytest suite pins
-    at small n, re-asserted here at scale)."""
-    import pandas as pd
-
+def _ulaw_reencode():
+    """pandas_udf (bytes, codec) → a planted near-dup of the clip:
+    decoded, scaled by 0.9 and re-encoded as ulaw."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import BinaryType
 
     from dataflows_spark.functions import audio
-    from dataflows_spark.functions import audio_fp as afp
-    from dataflows_spark.sources.clips import clips_df
-
-    n = n or max(int(80_000 * SF), 2000)  # 8k clips at the default sf0.1
-    spark = _session(CPUS)
-    base = clips_df(spark, n, seed=42, dur_min=1000, dur_max=3000).select(
-        "clip_id", "bytes", "codec", "sr_hz"
-    )
 
     @F.pandas_udf(BinaryType())
     def _reencode(raw: pd.Series, codec: pd.Series) -> pd.Series:
@@ -502,11 +487,33 @@ def run_audio_neardup_tier(n: int | None = None) -> dict:
             ]
         )
 
+    return _reencode
+
+
+def run_audio_neardup_tier(n: int | None = None) -> dict:
+    """Audio near-dup fingerprinting (functions/audio_fp.py) end to
+    end at bench scale: n base clips (mixed codecs, 1-3 s) + 5%
+    planted distortions (decode → re-encode ulaw + 0.9× gain, fresh
+    ids) → full candidate→verify pipeline. Reports wall-clock, pair
+    count and PLANTED RECALL (every planted copy must pair with its
+    original — recall is the correctness check the pytest suite pins
+    at small n, re-asserted here at scale)."""
+    from pyspark.sql import functions as F
+
+    from dataflows_spark.functions import audio_fp as afp
+    from dataflows_spark.sources.clips import clips_df
+
+    n = n or max(int(80_000 * SF), 2000)  # 8k clips at the default sf0.1
+    spark = _session(CPUS)
+    base = clips_df(spark, n, seed=42, dur_min=1000, dur_max=3000).select(
+        "clip_id", "bytes", "codec", "sr_hz"
+    )
+
     planted = (
         base.filter(F.pmod(F.xxhash64("clip_id"), F.lit(20)) == 0)
         .select(
             F.concat(F.col("clip_id"), F.lit("_re")).alias("clip_id"),
-            _reencode("bytes", "codec").alias("bytes"),
+            _ulaw_reencode()("bytes", "codec").alias("bytes"),
             F.lit("ulaw").alias("codec"),
             "sr_hz",
         )
@@ -550,12 +557,8 @@ def run_audio_dedup_stream_tier(n: int | None = None, n_batches: int = 8) -> dic
     import shutil
     import tempfile
 
-    import pandas as pd
-
     from pyspark.sql import functions as F
-    from pyspark.sql.types import BinaryType
 
-    from dataflows_spark.functions import audio
     from dataflows_spark.sources.clips import clips_df
     from dataflows_spark.streaming import StreamingAudioDeduper
 
@@ -572,15 +575,6 @@ def run_audio_dedup_stream_tier(n: int | None = None, n_batches: int = 8) -> dic
         )
     )
 
-    @F.pandas_udf(BinaryType())
-    def _reencode(raw: pd.Series, codec: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                bytearray(audio.encode_clip(0.9 * audio.decode_clip(b, c), "ulaw"))
-                for b, c in zip(raw, codec)
-            ]
-        )
-
     batch_size = n // n_batches
     # planted: copies of originals from batches 0..n_batches-2 only, so
     # each recall is strictly cross-batch against the accumulated index
@@ -589,7 +583,7 @@ def run_audio_dedup_stream_tier(n: int | None = None, n_batches: int = 8) -> dic
         .filter(F.pmod(F.xxhash64("clip_id"), F.lit(20)) == 0)
         .select(
             F.concat(F.col("clip_id"), F.lit("-re")).alias("clip_id"),
-            _reencode("bytes", "codec").alias("bytes"),
+            _ulaw_reencode()("bytes", "codec").alias("bytes"),
             F.lit("ulaw").alias("codec"),
             "sr_hz",
             F.lit(n).cast("long").alias("ord"),
@@ -794,65 +788,6 @@ def run_sf1_tier() -> dict:
 SF10_N = 1_200_000
 SF10_DOCS_PATH = os.path.join(REPO, "data", f"bench_docs_{SF10_N}")
 SF10_EMB_PATH = os.path.join(REPO, "data", f"bench_emb_{SF10_N}")
-
-
-def run_sf10_tier() -> dict:
-    """ONE-OFF 10× scale evidence (1.2M docs / 1.2M×64 vectors,
-    ``--sf10-only``): the same dedup/ANN operators as the sf1 tier, on a
-    corpus 10× larger, to show the banded/bucketed equi-join shapes
-    scale sub-quadratically — wall-clock growing ~linearly (not 100×)
-    between the tiers is the check. Not part of the per-round driver
-    run (adds ~10 min); the recorded numbers live in BENCH/BASELINE.md."""
-    from pyspark.sql import functions as F
-
-    from dataflows_spark.functions import dedup as ddp
-    from dataflows_spark.functions import similarity as sim
-
-    spark = _session(CPUS)
-    _ensure_doc_corpus(spark, SF10_N, SF10_DOCS_PATH, SF10_EMB_PATH)
-    docs = spark.read.parquet(SF10_DOCS_PATH)
-    emb = spark.read.parquet(SF10_EMB_PATH)
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-
-    def timed(name, fn):
-        t0 = time.time()
-        counts[name] = fn()
-        timings[name] = round(time.time() - t0, 3)
-
-    timed("exact_dedup", lambda: ddp.exact_dedup(docs, "text", "doc_id").count())
-    timed(
-        "minhash_lsh_pairs",
-        lambda: ddp.minhash_lsh_candidates(
-            docs, "text", "doc_id", num_hashes=4, num_bands=2, ngram=5, materialize=True
-        ).count(),
-    )
-    timed(
-        "jaccard_pairs",
-        lambda: ddp.jaccard_pairs(docs, "text", "doc_id", threshold=0.8).count(),
-    )
-    from dataflows_spark.core import eager_cache, release_materialized
-
-    edges = eager_cache(
-        ddp.jaccard_pairs(docs, "text", "doc_id", threshold=0.8).select("id_a", "id_b")
-    )
-    timed(
-        "neardup_clusters_star",
-        lambda: ddp.connected_components(edges, max_iterations=30, algorithm="star").count(),
-    )
-    release_materialized()
-    # bits scaled with the corpus (see StreamingEmbeddingDeduper note):
-    # 1.2M vectors need 2^16+ buckets to bound collision verification
-    timed(
-        "embedding_lsh_neardup",
-        lambda: sim.lsh_neardup_pairs(
-            emb, "embedding", "vec_id", threshold=0.99, dim=64, bits=16, materialize=True
-        ).count(),
-    )
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
-    timed("ann_cosine_topk", lambda: sim.cosine_topk(emb, "embedding", "vec_id", qvec, k=10).count())
-    spark.stop()
-    return {"n_docs": SF10_N, "n_vectors": SF10_N, "sec": timings, "result_rows": counts}
 
 
 def _median_growth(per_batch: list[float]) -> float | None:
@@ -1289,6 +1224,22 @@ def compare_block(result: dict, baseline_path: str) -> dict:
     return block
 
 
+def _phases(full: bool) -> dict:
+    """The post-sampling phases in run order, name → callable: the
+    default sweep runs them all, ``--only <name>`` runs one."""
+    return {
+        "queries": run_headline_queries,
+        "sf1_dedup_ann": run_sf1_tier,
+        "audio_neardup": run_audio_neardup_tier,
+        "audio_dedup_stream": run_audio_dedup_stream_tier,
+        "streaming_curation": run_streaming_curation_tier,
+        "curation_pruning_demo": lambda: run_curation_pruning_demo(
+            None if full else PRUNE_DEMO_PHASES[:2]
+        ),
+        "streaming_curation_sf10": lambda: run_streaming_curation_sf10(24 if full else 12),
+    }
+
+
 def main() -> None:
     if len(sys.argv) >= 2 and sys.argv[1] == "--hwprobe":
         print("HWPROBE_RESULT " + json.dumps({"ffts_per_sec": round(hw_probe(int(sys.argv[2])))}))
@@ -1307,38 +1258,27 @@ def main() -> None:
         print("STREAM_RESULT " + json.dumps(r))
         return
 
-    if "--sf1-only" in sys.argv:
-        print(json.dumps({"sf1_dedup_ann": run_sf1_tier()}))
-        return
-
-    if "--audio-neardup-only" in sys.argv:
-        print(json.dumps({"audio_neardup": run_audio_neardup_tier()}))
-        return
-
-    if "--audio-dedup-stream-only" in sys.argv:
-        print(json.dumps({"audio_dedup_stream": run_audio_dedup_stream_tier()}))
-        return
-
-    if "--curation-only" in sys.argv:
-        print(json.dumps({"streaming_curation": run_streaming_curation_tier()}))
-        return
-
-    if "--sf10-only" in sys.argv:
-        print(json.dumps({"sf10_dedup_ann": run_sf10_tier()}))
-        return
-
-    if "--pruning-demo-only" in sys.argv:
-        print(json.dumps({"curation_pruning_demo": run_curation_pruning_demo()}))
-        return
-
-    if "--curation-sf10-only" in sys.argv:
-        print(json.dumps({"streaming_curation_sf10": run_streaming_curation_sf10()}))
-        return
-
     full = "--full" in sys.argv
+    phases = _phases(full)
+    if "--only" in sys.argv:
+        name = (sys.argv[sys.argv.index("--only") + 1 :] or [None])[0]
+        if name not in phases:
+            sys.exit(f"--only takes one of: {', '.join(phases)}")
+        print(json.dumps({name: phases[name]()}))
+        return
+
     compare_to = None
     if "--compare" in sys.argv:
         compare_to = sys.argv[sys.argv.index("--compare") + 1]
+    # each level runs pinned to its own cores: a level above the host's
+    # CPU count would silently oversubscribe and still be labelled N cores
+    LEVELS = (32, 8, 2)
+    host_cpus = len(os.sched_getaffinity(0))
+    if max(LEVELS) > host_cpus:
+        sys.exit(
+            f"the default sweep pins levels {LEVELS} but this host has {host_cpus} CPUs; "
+            "run perfbench/run.py, or one phase with --only"
+        )
     ensure_clips()
     # INTERLEAVED level sampling (round-4 judge ask 2): the old
     # per-level sequential blocks let one contended host window poison
@@ -1349,7 +1289,6 @@ def main() -> None:
     # the official number: a contended window can hit at most one
     # sample per level, and the per-sample series stays in the
     # artifact so the spread is visible.
-    LEVELS = (32, 8, 2)
     ROUNDS = 3
     chain_samples: dict[int, list[dict]] = {c: [] for c in LEVELS}
     stream_samples: dict[int, list[dict]] = {c: [] for c in LEVELS}
@@ -1672,23 +1611,9 @@ def main() -> None:
     del result["hw_ceiling_probe"]  # lives inside scaling.hw_ceiling
     refresh_scaling()
     emit()
-    run_phase("queries", run_headline_queries)
-    emit()
-    run_phase("sf1_dedup_ann", run_sf1_tier)
-    emit()
-    run_phase("audio_neardup", run_audio_neardup_tier)
-    emit()
-    run_phase("audio_dedup_stream", run_audio_dedup_stream_tier)
-    emit()
-    run_phase("streaming_curation", run_streaming_curation_tier)
-    emit()
-    run_phase(
-        "curation_pruning_demo",
-        lambda: run_curation_pruning_demo(None if full else PRUNE_DEMO_PHASES[:2]),
-    )
-    emit()
-    run_phase("streaming_curation_sf10", lambda: run_streaming_curation_sf10(24 if full else 12))
-    emit()
+    for name, fn in phases.items():
+        run_phase(name, fn)
+        emit()
 
     result["complete"] = True
     if compare_to is None:

@@ -93,7 +93,7 @@ def build_session(
         os.environ["PYTHONPATH"] = f"{pkg_root}{os.pathsep}{existing}" if existing else pkg_root
 
     if master is None:
-        cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
         master = f"local[{cores}]"
     elif cores is None:
         cores = 32

@@ -121,34 +121,6 @@ def pcm_rms(pcm: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(DoubleType())
-def pcm_peak(pcm: pd.Series) -> pd.Series:
-    return pcm.map(lambda a: None if a is None or len(a) == 0 else float(np.max(np.abs(np.asarray(a)))))
-
-
-@F.pandas_udf(DoubleType())
-def pcm_zero_crossing_rate(pcm: pd.Series) -> pd.Series:
-    def zcr(a):
-        if a is None or len(a) < 2:
-            return None
-        arr = np.asarray(a)
-        return float(np.mean(np.signbit(arr[:-1]) != np.signbit(arr[1:])))
-
-    return pcm.map(zcr)
-
-
-@F.pandas_udf(DoubleType())
-def decoded_snr_vs(raw: pd.Series, codec: pd.Series, ref: pd.Series) -> pd.Series:
-    """SNR of the decoded payload vs a reference float array column."""
-    vals = []
-    for b, c, r in zip(raw, codec, ref):
-        if b is None or c is None or r is None:
-            vals.append(None)
-        else:
-            vals.append(snr_db(np.asarray(r, dtype=np.float64), decode_clip(b, c)))
-    return pd.Series(vals, dtype="float64")
-
-
 _DECODE_STATS_T = StructType(
     [
         StructField("rms", DoubleType()),
@@ -179,56 +151,6 @@ def decode_stats(raw: pd.Series, codec: pd.Series) -> pd.DataFrame:
         zcr.append(float(np.mean(np.signbit(x[:-1]) != np.signbit(x[1:]))) if len(x) > 1 else 0.0)
         n.append(int(len(x)))
     return pd.DataFrame({"rms": rms, "peak": peak, "zcr": zcr, "n_samples": n})
-
-
-_SPECTRAL_T = StructType(
-    [
-        StructField("rms", DoubleType()),
-        StructField("zcr", DoubleType()),
-        StructField("spectral_centroid", DoubleType()),
-        StructField("spectral_bandwidth", DoubleType()),
-        StructField("spectral_rolloff", DoubleType()),
-        StructField("n_samples", LongType()),
-    ]
-)
-
-
-@F.pandas_udf(_SPECTRAL_T)
-def decode_spectral(raw: pd.Series, codec: pd.Series, sr_hz: pd.Series) -> pd.DataFrame:
-    """Fused decode + spectral feature extraction (rfft-based centroid,
-    bandwidth, 85% rolloff) — the compute-dense hot path of a real audio
-    training-data pipeline. PCM never leaves the worker."""
-    cols = {k: [] for k in ("rms", "zcr", "spectral_centroid", "spectral_bandwidth", "spectral_rolloff", "n_samples")}
-    for b, c, sr in zip(raw, codec, sr_hz):
-        if b is None or c is None:
-            for k in cols:
-                cols[k].append(None)
-            continue
-        x = decode_clip(b, c)
-        n = len(x)
-        if n < 2:
-            for k in cols:
-                cols[k].append(0.0 if k != "n_samples" else n)
-            continue
-        xd = x.astype(np.float64)
-        spec = np.abs(np.fft.rfft(xd))
-        power = spec * spec
-        freqs = np.fft.rfftfreq(n, d=1.0 / (sr or 16000))
-        total = power.sum()
-        if total <= 0:
-            centroid = bandwidth = rolloff = 0.0
-        else:
-            centroid = float((freqs * power).sum() / total)
-            bandwidth = float(np.sqrt(((freqs - centroid) ** 2 * power).sum() / total))
-            csum = np.cumsum(power)
-            rolloff = float(freqs[int(np.searchsorted(csum, 0.85 * total))])
-        cols["rms"].append(float(np.sqrt(np.mean(xd * xd))))
-        cols["zcr"].append(float(np.mean(np.signbit(x[:-1]) != np.signbit(x[1:]))))
-        cols["spectral_centroid"].append(centroid)
-        cols["spectral_bandwidth"].append(bandwidth)
-        cols["spectral_rolloff"].append(rolloff)
-        cols["n_samples"].append(n)
-    return pd.DataFrame(cols)
 
 
 def resample_pcm(x: np.ndarray, sr_in: int, sr_out: int) -> np.ndarray:

@@ -5,13 +5,15 @@ Scale notes (the 100 TB design):
 
 - exact: hash-groupBy on the md5 fingerprint — one shuffle keyed by a
   uniform 128-bit hash, no skew by construction.
-- MinHash+LSH: shingle → K md5-derived min-hashes → B bands; candidate
-  pairs come from an equi-join on (band_id, band_hash) — the classic
-  banding trick, so the cross-join never materializes. Signatures are
-  computed with higher-order array expressions (JVM-side).
-- SimHash: 64-bit sign-aggregated token hashes via xxhash64 + bit ops;
-  near-dups = equal simhash bucket (or small Hamming distance within a
-  bucket join).
+- MinHash+LSH: shingle → K min-hashes → B bands; candidate pairs come
+  from an equi-join on (band_id, band_hash) — the classic banding
+  trick, so the cross-join never materializes. :func:`minhash_sig` and
+  :func:`gram_hashes` are the only code that picks the hash family:
+  ``'arrow'`` (production — a batch-vectorized numpy kernel in a
+  pandas_udf) or ``'md5'`` (JVM-side expressions the DuckDB oracle
+  mirrors bit-for-bit).
+- SimHash: 64-bit sign-aggregated md5-derived token hashes + bit ops;
+  near-dups = equal simhash bucket.
 - n-gram Jaccard: exact pairwise verification, used downstream of a
   blocking/banding join — never on the raw cross product.
 """
@@ -77,112 +79,88 @@ def minhash_hash(grams_col: Column, i: int) -> Column:
     )
 
 
-def minhash_signature(col, num_hashes: int = 16, ngram: int = 3) -> Column:
-    """MinHash signature as a single expression.
-
-    PERF NOTE: the grams subexpression is inlined per hash and Catalyst
-    does not CSE it across lambdas — on wide signatures prefer
-    :func:`with_minhash`, which materializes the grams column once
-    (observed ~12× on 5k docs)."""
-    grams = char_ngrams(col, ngram)
-    return F.array(*[minhash_hash(grams, i) for i in range(num_hashes)])
+def _check_hash_fn(hash_fn: str) -> None:
+    """The two MinHash families: 'arrow' (production) and 'md5' (oracle)."""
+    if hash_fn not in ("arrow", "md5"):
+        raise ValueError(f"unknown hash_fn {hash_fn!r}: use 'arrow' or 'md5'")
 
 
-def minhash_sig_expr(grams_col: Column, num_hashes: int, hash_fn: str = "md5") -> Column:
-    """MinHash signature expression over a MATERIALIZED grams column.
+def minhash_sig(text, num_hashes: int, ngram: int, hash_fn: str) -> Column:
+    """MinHash signature (``num_hashes`` bigints) over the distinct
+    ``ngram``-character shingles of the normalized ``text``.
 
-    ``hash_fn``:
-    - ``'md5'`` (default): cross-engine REPRODUCIBLE — the DuckDB
-      oracles mirror it bit-for-bit. ``num_hashes ≤ 4``: ONE fold over
-      the grams — each gram md5-hashed once, the digest sliced into
-      independent 32-bit (8-hex) values, K running minima kept in a
-      struct accumulator. Wider signatures fall back to one md5 per
-      (gram, i). Shared by :func:`with_minhash` (batch) and the
-      streaming curation tier so both produce identical band hashes.
-    - ``'xxhash64'``: the PRODUCTION fast path — Spark's codegen'd
-      xxhash64 (no hex string/conv round-trip), one seeded call per
-      (gram, i) folded into running minima. ~2× the signature
-      throughput (measured at 120k docs); same banding semantics, but
-      values are Spark-specific (not oracle-mirrorable — use md5 when
-      cross-engine verification matters)."""
-    if hash_fn == "xxhash64":
-        init = F.struct(
-            *[F.lit((1 << 63) - 1).cast("bigint").alias(f"h{i}") for i in range(num_hashes)]
+    - ``'arrow'``: :func:`arrow_minhash_udf`, the production kernel.
+    - ``'md5'``: JVM-side expressions the DuckDB oracle mirrors
+      bit-for-bit. ``num_hashes ≤ 4``: ONE fold over the grams — each
+      gram md5-hashed once, the digest sliced into independent 32-bit
+      (8-hex) values, K running minima kept in a struct accumulator
+      (K× fewer md5 calls than per-i hashing; 32-bit mins are ample
+      because a band concatenates ≥2 values). Wider signatures fall
+      back to one md5 per (gram, i) via :func:`minhash_hash`.
+
+    Both families band identically — exact duplicates always collide —
+    but their values are not comparable."""
+    _check_hash_fn(hash_fn)
+    if hash_fn == "arrow":
+        return arrow_minhash_udf(num_hashes, ngram)(text)
+    grams = char_ngrams(text, ngram)
+    if num_hashes > 4:
+        # bind the gram array to a lambda variable so it is generated
+        # once per row — Catalyst does not share it across the K
+        # array_min calls (gram generation dominates the signature cost)
+        return F.transform(
+            F.array(grams), lambda g: F.array(*[minhash_hash(g, i) for i in range(num_hashes)])
+        )[0]
+    init = F.struct(*[F.lit(1 << 62).cast("bigint").alias(f"h{i}") for i in range(num_hashes)])
+
+    def step(acc: Column, g: Column) -> Column:
+        m = F.md5(g)
+        return F.struct(
+            *[
+                F.least(
+                    acc[f"h{i}"],
+                    F.conv(F.substring(m, 1 + 8 * i, 8), 16, 10).cast("bigint"),
+                ).alias(f"h{i}")
+                for i in range(num_hashes)
+            ]
         )
 
-        def xstep(acc: Column, g: Column) -> Column:
-            return F.struct(
-                *[
-                    F.least(acc[f"h{i}"], F.xxhash64(g, F.lit(i))).alias(f"h{i}")
-                    for i in range(num_hashes)
-                ]
-            )
+    s = F.aggregate(grams, init, step)
+    return F.array(*[s[f"h{i}"] for i in range(num_hashes)])
 
-        s = F.aggregate(grams_col, init, xstep)
-        return F.array(*[s[f"h{i}"] for i in range(num_hashes)])
-    if hash_fn != "md5":
-        raise ValueError(f"unknown hash_fn {hash_fn!r}: use 'md5' or 'xxhash64'")
-    if num_hashes <= 4:
-        init = F.struct(*[F.lit(1 << 62).cast("bigint").alias(f"h{i}") for i in range(num_hashes)])
 
-        def step(acc: Column, g: Column) -> Column:
-            m = F.md5(g)
-            return F.struct(
-                *[
-                    F.least(
-                        acc[f"h{i}"],
-                        F.conv(F.substring(m, 1 + 8 * i, 8), 16, 10).cast("bigint"),
-                    ).alias(f"h{i}")
-                    for i in range(num_hashes)
-                ]
-            )
-
-        s = F.aggregate(grams_col, init, step)
-        return F.array(*[s[f"h{i}"] for i in range(num_hashes)])
-    return F.array(*[minhash_hash(grams_col, i) for i in range(num_hashes)])
+def gram_hashes(text, ngram: int, hash_fn: str) -> Column:
+    """int64 hashes of the distinct ``ngram``-character shingles of the
+    normalized ``text`` — the sets whose exact Jaccard verifies a
+    candidate pair. Hashing before the set ops keeps them off string
+    arrays; the Jaccard value is unchanged (collisions at these widths:
+    ~0). ``'arrow'`` uses Spark's codegen'd xxhash64, ``'md5'`` the
+    first 15 hex digits of md5, which the DuckDB oracle mirrors."""
+    _check_hash_fn(hash_fn)
+    grams = char_ngrams(text, ngram)
+    if hash_fn == "arrow":
+        return F.transform(grams, lambda g: F.xxhash64(g))
+    return F.transform(grams, lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("bigint"))
 
 
 def with_minhash(df: DataFrame, text_col: str, id_col: str, num_hashes: int = DEFAULT_NUM_HASHES, ngram: int = DEFAULT_NGRAM, partitions: int | None = None, hash_fn: str = DEFAULT_HASH_FN) -> DataFrame:
-    """(id, sig) with the grams column materialized once — the scale
-    path. Repartitions first: small single-file sources otherwise run
-    the whole signature computation in one task.
+    """(id, sig): the :func:`minhash_sig` signature of every row.
+    Repartitions first: small single-file sources otherwise run the
+    whole signature computation in one task.
 
     ``hash_fn`` defaults to :data:`DEFAULT_HASH_FN` — the SAME default
     as ``jaccard_pairs``/``minhash_lsh_candidates``, so a signature
     table persisted with this function's defaults band-matches
-    candidates produced by the others'. ``'arrow'`` delegates to
-    :func:`with_minhash_arrow` (vectorized-numpy kernel);
-    ``'xxhash64'`` is the codegen'd JVM fast path; pass ``'md5'`` when
-    a DuckDB oracle must mirror the signature values bit-for-bit (the
-    gates do).
-
-    For ``num_hashes ≤ 4`` the signature is ONE fold over the grams:
-    each gram md5-hashed once, the digest sliced into independent
-    32-bit (8-hex) values, K running minima kept in a struct
-    accumulator — no intermediate digest array, K× fewer md5 calls
-    (measured head-to-head vs per-i md5 and vs a materialized digest
-    array at sf0.1; gram generation dominates, the fold wins on both
-    md5 count and allocations). 32-bit mins are ample for banding
-    (bands concatenate ≥2 values → ≥64 bits). Wider signatures fall
-    back to one md5 per (gram, i). Both shapes are mirrored exactly by
-    the DuckDB oracle."""
-    if hash_fn == "arrow":
-        return with_minhash_arrow(df, text_col, id_col, num_hashes, ngram, partitions)
+    candidates produced by the others'. Pass ``'md5'`` when a DuckDB
+    oracle must mirror the signature values bit-for-bit (the gates do)."""
+    sig = minhash_sig(F.col(text_col), num_hashes, ngram, hash_fn)
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    grams = df.repartition(n).select(F.col(id_col).alias("id"), char_ngrams(text_col, ngram).alias("__grams"))
-    return grams.select("id", minhash_sig_expr(F.col("__grams"), num_hashes, hash_fn).alias("sig"))
+    return df.repartition(n).select(F.col(id_col).alias("id"), sig.alias("sig"))
 
 
-def with_minhash_arrow(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 4,
-    ngram: int = 5,
-    partitions: int | None = None,
-) -> DataFrame:
-    """(id, sig) via a BATCH-VECTORIZED Arrow kernel — the throughput
-    path for signature computation.
+def arrow_minhash_udf(num_hashes: int, ngram: int):
+    """The production signature kernel as a pandas_udf: text → K
+    MinHash values, BATCH-VECTORIZED with numpy.
 
     The Catalyst signature path spends ~95% of its time GENERATING the
     gram array (one ``substr`` + UTF8String allocation per position —
@@ -196,18 +174,8 @@ def with_minhash_arrow(
     ``np.minimum.reduceat`` — fully vectorized ACROSS the batch, not
     per row. ~10× the Catalyst signature throughput (measured).
 
-    Signatures are NOT comparable across the md5/xxhash64 expression
-    paths (different hash family) — banding semantics are identical;
-    exact duplicates always collide. Use the md5 path when a DuckDB
-    oracle must mirror values."""
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    sig = arrow_minhash_udf(num_hashes, ngram)
-    return df.repartition(n).select(F.col(id_col).alias("id"), sig(F.col(text_col)).alias("sig"))
-
-
-def arrow_minhash_udf(num_hashes: int, ngram: int):
-    """The vectorized signature kernel of :func:`with_minhash_arrow` as
-    a reusable pandas_udf (compose inline to avoid a join)."""
+    Signatures are NOT comparable with the md5 path (different hash
+    family); banding semantics are identical."""
     from pyspark.sql.types import ArrayType, LongType
 
     K = num_hashes
@@ -349,10 +317,6 @@ def simhash64(col) -> Column:
     )
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 # ---------------------------------------------------------------------------
 # DataFrame-level dedup strategies
 # ---------------------------------------------------------------------------
@@ -406,24 +370,22 @@ def jaccard_pairs(
 
     HASH PATHS: ``hash_fn='arrow'`` (default) is the vectorized-numpy
     production kernel — ~3.5× faster end-to-end than md5 at 120k docs
-    (10.7s vs 38.0s measured); ``'xxhash64'`` is the pure-JVM codegen
-    path; ``'md5'`` exists for cross-engine reproducibility (the
-    DuckDB oracle gates pass it explicitly and mirror the banding
-    bit-for-bit). All three share identical banding/verify semantics —
-    only the hash family (and thus the exact candidate set of the
-    probabilistic tier) differs.
+    (10.7s vs 38.0s measured); ``'md5'`` exists for cross-engine
+    reproducibility (the DuckDB oracle gates pass it explicitly and
+    mirror the banding bit-for-bit). Both share identical
+    banding/verify semantics — only the hash family (and thus the exact
+    candidate set of the probabilistic tier) differs.
 
     SIG GRAMS: the signature uses ``sig_ngram``-grams (default 5) —
     3-gram min-hashes flood the banding on shared-vocabulary corpora
     (measured round-2: corpus_clean hung at sf0.1 on 3-gram bands)
     while verification stays on ``ngram``-grams.
 
-    SET-OP SHAPE: verification grams are md5-hashed to int64 BEFORE
-    the pairwise intersect/union — string-array set ops dominate the
-    wall clock otherwise (~2× end-to-end measured at sf0.1); the
-    Jaccard value is unchanged (hash collisions at 60 bits over these
-    set sizes: ~0). Candidate pairs stay NARROW (id, id) through the
-    distinct; gram arrays join back by id.
+    SET-OP SHAPE: verification grams are hashed to int64
+    (:func:`gram_hashes`) BEFORE the pairwise intersect/union —
+    string-array set ops dominate the wall clock otherwise (~2×
+    end-to-end measured at sf0.1). Candidate pairs stay NARROW (id, id)
+    through the distinct; gram arrays join back by id.
 
     COMPUTE SHAPE: the band self-join and the two gram lookups each
     evaluate their child twice, so a fully-lazy plan runs the
@@ -438,19 +400,10 @@ def jaccard_pairs(
     self-join is NOT the answer: Spark re-plans it as a mis-estimated
     broadcast at scale — measured timeout at 120k docs.)"""
     t = normalize_text(text_col)
-    if hash_fn in ("xxhash64", "arrow"):  # production fast paths (not oracle-mirrorable)
-        ghash = F.transform(char_ngrams(text_col, ngram), lambda g: F.xxhash64(g))
-    else:
-        ghash = F.transform(
-            char_ngrams(text_col, ngram),
-            lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("bigint"),
-        )
+    ghash = gram_hashes(text_col, ngram, hash_fn)
     _check_banding(num_hashes, num_bands)
     rows_per_band = num_hashes // num_bands
-    if hash_fn == "arrow":
-        sig_expr = arrow_minhash_udf(num_hashes, sig_ngram)(F.col(text_col))
-    else:
-        sig_expr = minhash_sig_expr(char_ngrams(text_col, sig_ngram), num_hashes, hash_fn)
+    sig_expr = minhash_sig(F.col(text_col), num_hashes, sig_ngram, hash_fn)
     bands_expr = minhash_bands(sig_expr, num_bands, rows_per_band)
     lband_expr = (F.length(t) / length_band).cast("int")
     src = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
@@ -531,10 +484,7 @@ def minhash_lsh_candidates(
     the gates pass explicitly."""
     _check_banding(num_hashes, num_bands)
     rows_per_band = num_hashes // num_bands
-    if hash_fn == "arrow":
-        sig = with_minhash_arrow(df, text_col, id_col, num_hashes, ngram)
-    else:
-        sig = with_minhash(df, text_col, id_col, num_hashes, ngram, hash_fn=hash_fn)
+    sig = with_minhash(df, text_col, id_col, num_hashes, ngram, hash_fn=hash_fn)
     banded = sig.select("id", F.explode(minhash_bands(F.col("sig"), num_bands, rows_per_band)).alias("b")).select(
         "id", F.col("b.band").alias("band"), F.col("b.band_hash").alias("band_hash")
     )

@@ -76,11 +76,6 @@ def quality_score(col, toks: Column | None = None) -> Column:
     return (length_ok + punct_ok + stop_ok) / F.lit(3.0)
 
 
-def lang_score(col, lang: str) -> Column:
-    """Stopword-hit score for one language (heuristic lang-ID input)."""
-    return stopword_ratio(col, lang)
-
-
 def lang_id(col, toks: Column | None = None) -> Column:
     """Pick the language whose stopword inventory scores highest
     (deterministic tiebreak: language code order); 'und' when no

@@ -18,7 +18,7 @@ execution model:
   anti-joined against the seen-fingerprint set (exact tier), (2)
   band-exploded and equi-joined on (band, band_hash) against both the
   batch itself and the persisted band index (LSH tier), (3)
-  exact-Jaccard verified on md5-int64 gram hashes, and dropped on a
+  exact-Jaccard verified on int64 gram hashes, and dropped on a
   verified match.
 - **BUCKETED index, pruned reads** (judge round-3 item 1): the index
   is THREE key-partitioned parquet tables — seen fingerprints
@@ -90,11 +90,11 @@ from ..functions.dedup import (
     DEFAULT_NUM_BANDS,
     DEFAULT_NUM_HASHES,
     _check_banding,
-    arrow_minhash_udf,
-    char_ngrams,
+    _check_hash_fn,
+    gram_hashes,
     jaccard,
     minhash_bands,
-    minhash_sig_expr,
+    minhash_sig,
 )
 from ..functions.similarity import cosine_sim, lsh_signature
 from . import bloom
@@ -856,16 +856,16 @@ class StreamingCorpusCleaner(_IncrementalDedupSink):
         collect_metrics: bool = False,
         compact_every: int | None = None,
     ):
-        super().__init__(path, num_buckets, collect_metrics, compact_every)
         _check_banding(num_hashes, num_bands)
+        _check_hash_fn(hash_fn)
+        super().__init__(path, num_buckets, collect_metrics, compact_every)
         self.id_col = id_col
         self.text_col = text_col
         self.num_hashes = num_hashes
         self.num_bands = num_bands
         self.ngram = ngram
         self.jaccard_threshold = jaccard_threshold
-        #: 'arrow' (default) = the vectorized production fast path;
-        #: 'xxhash64' = codegen'd JVM fast path; 'md5' =
+        #: 'arrow' (default) = the vectorized production path; 'md5' =
         #: DuckDB-oracle-reproducible (the gates pass it explicitly —
         #: see functions.dedup for the tradeoff)
         self.hash_fn = hash_fn
@@ -917,14 +917,9 @@ class StreamingCorpusCleaner(_IncrementalDedupSink):
         # batch at 32 cores; the same single-file pitfall with_minhash
         # guards against)
         batch = batch.repartition(batch.sparkSession.sparkContext.defaultParallelism)
-        if self.hash_fn == "arrow":
-            # the source column, NOT the post-select alias "text" — this
-            # select computes every expression against the raw batch
-            sig = arrow_minhash_udf(self.num_hashes, self.ngram)(F.col(self.text_col))
-        else:
-            sig = minhash_sig_expr(
-                char_ngrams(F.col(self.text_col), self.ngram), self.num_hashes, self.hash_fn
-            )
+        # the source column, NOT the post-select alias "text" — this
+        # select computes every expression against the raw batch
+        sig = minhash_sig(F.col(self.text_col), self.num_hashes, self.ngram, self.hash_fn)
         rows_per_band = self.num_hashes // self.num_bands
         return batch.select(
             F.col(self.id_col).alias("doc_id"),
@@ -933,22 +928,13 @@ class StreamingCorpusCleaner(_IncrementalDedupSink):
             minhash_bands(sig, self.num_bands, rows_per_band).alias("bands"),
         )
 
-    def _ghash(self, text_col) -> Column:
-        """int64-hashed verify grams of a text column (md5 when the
-        DuckDB oracle must mirror values, xxhash64 otherwise)."""
-        g = char_ngrams(text_col, self.ngram)
-        if self.hash_fn in ("xxhash64", "arrow"):
-            return F.transform(g, lambda s: F.xxhash64(s))
-        return F.transform(
-            g, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
-        )
-
     def _gram_lut(self, docs: DataFrame, ids: DataFrame) -> DataFrame:
         """(doc_id, grams) for ONLY the ids present in candidate pairs —
         gram generation cost is O(candidates), not O(batch)/O(corpus),
         and doc-text IO O(candidates) too (see :func:`_candidate_rows`)."""
         sel = _candidate_rows(docs.select("doc_id", "text"), ids, "doc_id")
-        return sel.select("doc_id", self._ghash(F.col("text")).alias("grams"))
+        grams = gram_hashes(F.col("text"), self.ngram, self.hash_fn)
+        return sel.select("doc_id", grams.alias("grams"))
 
     def _verify(self, cands: DataFrame, lut_a: DataFrame, lut_b: DataFrame) -> DataFrame:
         """Candidate pairs whose exact gram Jaccard passes the threshold."""

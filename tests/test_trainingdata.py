@@ -445,45 +445,13 @@ def test_pack_documents_partition_independent(spark):
     assert empty.count() == 0
 
 
-def test_jaccard_pairs_xxhash64_fast_path(spark):
-    """hash_fn='xxhash64' (production path): same banding semantics —
-    planted exact dups carry identical signatures under ANY hash, so
-    they're always found with jaccard 1.0; J values match the md5 path
-    (set overlap is hash-invariant modulo collisions)."""
-    import random
-
-    rng = random.Random(3)
-    words = [f"w{i:03d}" for i in range(300)]
-    docs = [(i, " ".join(rng.sample(words, 25))) for i in range(100)]
-    docs += [(1000 + j, docs[j][1]) for j in range(5)]  # planted exact dups
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-
-    md5_pairs = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ddp.jaccard_pairs(df, "text", "doc_id", threshold=0.9, hash_fn="md5").collect()
-    }
-    xx_pairs = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ddp.jaccard_pairs(df, "text", "doc_id", threshold=0.9, hash_fn="xxhash64").collect()
-    }
-    planted = {(j, 1000 + j) for j in range(5)}
-    assert planted <= set(md5_pairs) and planted <= set(xx_pairs)
-    for p in planted:
-        assert md5_pairs[p] == xx_pairs[p] == 1.0
-    with _pytest_raises_value_error():
-        ddp.jaccard_pairs(df, "text", "doc_id", hash_fn="sha9000").count()
-
-
-def _pytest_raises_value_error():
-    import pytest as _p
-
-    return _p.raises(ValueError, match="hash_fn")
-
-
-def test_arrow_minhash_path(spark):
-    """hash_fn='arrow' (batch-vectorized numpy signature kernel): exact
-    dups always collide (identical text → identical sig), near dups
-    found at the expected banding rate, null/empty texts survive."""
+@pytest.mark.parametrize("hash_fn", ["md5", "arrow"])
+def test_arrow_minhash_path(spark, hash_fn):
+    """Both MinHash families ('arrow', the batch-vectorized numpy
+    signature kernel, and 'md5', the oracle path): planted exact dups
+    carry identical signatures under either, so they are always found
+    with jaccard 1.0; near dups are found at the expected banding rate.
+    The arrow kernel is null/empty/short safe and deterministic."""
     import random
 
     rng = random.Random(5)
@@ -494,18 +462,20 @@ def test_arrow_minhash_path(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ddp.jaccard_pairs(df, "text", "doc_id", threshold=0.8, hash_fn="arrow").collect()
+        for r in ddp.jaccard_pairs(df, "text", "doc_id", threshold=0.8, hash_fn=hash_fn).collect()
     }
     assert {(j, 1000 + j) for j in range(5)} <= set(pairs)
     assert all(pairs[(j, 1000 + j)] == 1.0 for j in range(5))
     assert sum((j, 2000 + j) in pairs for j in range(5)) >= 4  # banding recall
+    if hash_fn != "arrow":
+        return
 
     # sig kernel is null/empty/short safe, deterministic across calls
     df2 = spark.createDataFrame([(1, None), (2, ""), (3, "ab"), (4, "ab")], "doc_id long, text string")
-    rows = {r["id"]: r["sig"] for r in ddp.with_minhash_arrow(df2, "text", "doc_id").collect()}
+    rows = {r["id"]: r["sig"] for r in ddp.with_minhash(df2, "text", "doc_id", hash_fn="arrow").collect()}
     assert rows[1] is None and rows[2] is not None
     assert rows[3] == rows[4]  # identical text → identical sig
-    again = {r["id"]: r["sig"] for r in ddp.with_minhash_arrow(df2, "text", "doc_id").collect()}
+    again = {r["id"]: r["sig"] for r in ddp.with_minhash(df2, "text", "doc_id", hash_fn="arrow").collect()}
     assert rows == again
 
 
@@ -522,11 +492,12 @@ def test_banding_parameter_validation(spark):
         ddp.minhash_lsh_candidates(df, "text", "doc_id", num_hashes=5, num_bands=2)
 
 
-def test_default_hash_fn_is_shared_across_minhash_api(spark):
+def test_default_hash_fn_is_shared_across_minhash_api(spark, tmp_path):
     """round-4 advisor: one DEFAULT_HASH_FN across with_minhash /
     jaccard_pairs / minhash_lsh_candidates / StreamingCorpusCleaner —
     a signature table persisted via one function's defaults must
-    band-match candidates from another's."""
+    band-match candidates from another's. Every entry point rejects any
+    other family up front, before a Spark job or a file."""
     import inspect
 
     from dataflows_spark.functions import dedup as ddp
@@ -545,5 +516,23 @@ def test_default_hash_fn_is_shared_across_minhash_api(spark):
         "doc_id long, text string",
     )
     a = {(r["id"], tuple(r["sig"])) for r in ddp.with_minhash(df, "text", "doc_id", 4, 5).collect()}
-    b = {(r["id"], tuple(r["sig"])) for r in ddp.with_minhash_arrow(df, "text", "doc_id", 4, 5).collect()}
+    kernel = ddp.arrow_minhash_udf(4, 5)(F.col("text")).alias("sig")
+    b = {(r["doc_id"], tuple(r["sig"])) for r in df.select("doc_id", kernel).collect()}
     assert a == b
+
+    sc = spark.sparkContext
+    sc.setJobGroup("bad_hash_fn", "bad hash_fn")
+    try:
+        for bad in ("sha9000", "xxhash64"):
+            for call in (
+                lambda: ddp.with_minhash(df, "text", "doc_id", hash_fn=bad),
+                lambda: ddp.jaccard_pairs(df, "text", "doc_id", hash_fn=bad),
+                lambda: ddp.minhash_lsh_candidates(df, "text", "doc_id", hash_fn=bad),
+                lambda: StreamingCorpusCleaner(str(tmp_path / bad), hash_fn=bad),
+            ):
+                with pytest.raises(ValueError, match="hash_fn"):
+                    call()
+            assert not (tmp_path / bad).exists()
+        assert sc.statusTracker().getJobIdsForGroup("bad_hash_fn") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
