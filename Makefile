@@ -1,4 +1,4 @@
-.PHONY: test package submit submit-stream bench bench-compare oracle plans
+.PHONY: test package submit submit-stream bench oracle plans
 
 # CPU count of this host: the default parallelism of every target below
 NPROC := $(shell env -u OMP_NUM_THREADS nproc)
@@ -34,9 +34,6 @@ submit-stream: package
 
 bench:
 	python bench.py
-
-bench-compare:
-	python bench.py --compare $${BASELINE:?set BASELINE=BENCH_rNN.json}
 
 oracle:
 	python scripts/check_oracle.py /root/testdata/sf0.01

@@ -1,28 +1,29 @@
-"""Benchmark harness (driver contract).
+"""Benchmark tiers that ``perfbench/`` does not run.
 
-Headline metric (BASELINE.json): clips/sec end-to-end throughput of the
-windowed audio processor-chain (JVM duration validation → fused Arrow
-decode+features → transcript normalization → tumbling window agg) at
-SF=0.1, plus scaling efficiency between two parallelism levels.
+``perfbench/run.py`` is the declared benchmark (``BENCHMARK.json``): the
+headline audio chain, batch and streaming, sized to the CPUs this process
+may use and traced layer by layer. This script runs the other tiers, each
+in its own SparkSession that ``build_session`` sizes from the same CPUs:
 
-Cluster-size emulation: each parallelism level runs as its OWN pinned
-process (``taskset -c 0..N-1 local[N]``) so JVM task threads and Python
-UDF workers of the N-core config genuinely share N cores — the honest
-stand-in for an N-executor cluster (see BENCH/BASELINE.md). Two pairs
-are measured: N=2→4N=8 (inside the host's linear regime) and N=8→4N=32
-(host-saturated; a raw-FFT multiprocessing microbenchmark reports the
-hardware ceiling for normalization).
+  queries                  best-of-2 seconds of the headline queries at SF
+  sf1_dedup_ann            dedup/ANN operators at 120k docs and vectors
+  audio_neardup            batch audio near-dup fingerprinting, planted recall
+  streaming_curation       text and embedding dedup sinks, 24 micro-batches
+  curation_pruning_demo    the cleaner at keys << buckets, rebucketed once
+  streaming_curation_sf10  1.2M docs through the cleaner in 12 micro-batches
 
-Prints ONE JSON line:
-  {"metric": ..., "value": clips_per_sec@32, "unit": "clips/sec",
-   "queries": {...per-query sec...}, "sf": ..., "scaling": {...}}
+``python bench.py`` runs every tier in that order, ``python bench.py
+--only <tier>`` runs one. After each tier the result so far, with the
+perfbench ``host`` block, is rewritten to ``BENCH/last_run.json`` and the
+tier's JSON line is printed. ``SPARK_GRAFT_SF_DIR`` names the test-data
+directory the queries read; its name (``sf0.01``, ``sf0.1``, ...) sets SF.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -32,15 +33,9 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 _SF_FROM_DIR = {"sf0.001": 0.001, "sf0.01": 0.01, "sf0.1": 0.1}
 SF = _SF_FROM_DIR.get(os.path.basename(SF_DIR.rstrip("/")), 0.1)
-# SF=0.1 → 600k clips (TESTDATA.md tier); 100-400 ms payloads keep the
-# one-time cached generation ~5.5 GB
-N_CLIPS = max(int(6_000_000 * SF), 2000)
-DUR_MIN, DUR_MAX = 100, 400
-CLIPS_PATH = os.path.join(REPO, "data", f"bench_clips_{N_CLIPS}")
 
 HEADLINE = [
     "group_q1",
@@ -63,351 +58,12 @@ HEADLINE = [
 ]
 
 
-def _session(cores: int, extra: dict | None = None, shuffle_partitions: int | None = None):
+def _session():
     from dataflows_spark import build_session
 
-    conf = {"spark.sql.files.maxPartitionBytes": "33554432"}
-    conf.update(extra or {})
     return build_session(
-        app_name=f"bench_{cores}",
-        master=f"local[{cores}]",
-        cores=cores,
-        shuffle_partitions=shuffle_partitions,
-        extra_conf=conf,
+        app_name="bench", extra_conf={"spark.sql.files.maxPartitionBytes": "33554432"}
     )
-
-
-def ensure_clips() -> None:
-    if os.path.exists(os.path.join(CLIPS_PATH, "_SUCCESS")):
-        return
-    spark = _session(CPUS)
-    from dataflows_spark.sources.clips import clips_df
-
-    clips_df(spark, N_CLIPS, seed=42, dur_min=DUR_MIN, dur_max=DUR_MAX, partitions=256).write.mode(
-        "overwrite"
-    ).parquet(CLIPS_PATH)
-    spark.stop()
-
-
-def chain_run(cores: int, timed_runs: int) -> tuple[float, int]:
-    """The flagship windowed processor-chain at a given parallelism.
-    Warm-up (page cache, Python workers, codegen) precedes timing; with
-    timed_runs=2 the second (steady-state, allocators warm — what a
-    long-running streaming job sees) is reported."""
-    spark = _session(cores)
-    from pyspark.sql import functions as F
-
-    from dataflows_spark.functions import audio
-    from dataflows_spark.streaming import tumbling_window_agg
-
-    df = spark.read.parquet(CLIPS_PATH)
-    df.select(F.sum(F.length("bytes"))).collect()  # page cache + scan codegen
-    df.sample(0.03).select(audio.decode_stats("bytes", "codec").alias("st")).select(F.sum("st.rms")).collect()
-
-    def once() -> tuple[float, int]:
-        t0 = time.time()
-        valid = df.filter(audio.duration_valid_col())
-        feats = valid.withColumn("st", audio.decode_stats("bytes", "codec")).select(
-            "codec",
-            "event_time",
-            F.col("st.rms").alias("rms"),
-            F.col("st.n_samples").alias("n_samples"),
-            F.trim(F.regexp_replace(F.coalesce("transcript", F.lit("")), r"\s+", " ")).alias("transcript_norm"),
-        )
-        agg = tumbling_window_agg(
-            feats,
-            "event_time",
-            "1 hour",
-            ["codec"],
-            {
-                "n_clips": {"aggregate": "count"},
-                "mean_rms": {"name": "rms", "aggregate": "avg"},
-                "total_samples": {"name": "n_samples", "aggregate": "sum"},
-            },
-        )
-        rows = agg.collect()
-        return time.time() - t0, sum(r["n_clips"] for r in rows)
-
-    # best-of-K: the sandbox host shows variable steal time; the minimum
-    # is the least-contended (most hardware-representative) measurement
-    best, n = float("inf"), 0
-    for _ in range(timed_runs):
-        elapsed, n = once()
-        best = min(best, elapsed)
-    spark.stop()
-    return best, n
-
-
-def run_chain_subprocess(cores: int, timed_runs: int) -> dict:
-    """Execute one parallelism level in its own CPU-pinned process."""
-    cmd = [
-        "taskset",
-        "-c",
-        f"0-{cores - 1}" if cores > 1 else "0",
-        sys.executable,
-        os.path.abspath(__file__),
-        "--chain",
-        str(cores),
-        str(timed_runs),
-    ]
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=1800)
-    for line in out.stdout.splitlines():
-        if line.startswith("CHAIN_RESULT "):
-            return json.loads(line[len("CHAIN_RESULT ") :])
-    raise RuntimeError(f"chain run at {cores} cores produced no result: {out.stdout[-500:]} {out.stderr[-500:]}")
-
-
-STREAM_FILES = 192  # source files sized so every trigger divides evenly
-STREAM_SRC = os.path.join(REPO, "data", f"bench_stream_src_{N_CLIPS}_{STREAM_FILES}")
-# micro-batch size scales WITH the parallelism level — rows/trigger
-# EXACTLY ∝ cores (1.5 files/core × 3,125 clips/file = 4,688
-# clips/core/batch at every level): a 4×-bigger cluster ingests
-# 4×-bigger micro-batches in the same wall time — the production
-# weak-scaling operating point for a streaming job, and the honest way
-# to measure scaling without the fixed per-batch serial section
-# (offset log, state commit, sink commit) dominating the wide levels
-# while the narrow level amortizes it over longer compute (round-3
-# judge 'what's wrong' #1; round-4 asked for strict proportionality at
-# 32 — the old 32-file cap gave 32 cores only 1.3× the 8-core batch,
-# so per-batch state commit [137.9 → 2,064.5 ms from 2→32 cores at
-# near-fixed batch size] inverted the 8→32 leg). Every level still
-# processes the SAME complete input file set.
-STREAM_TRIGGER = {2: 3, 8: 12, 32: 48}  # 1.5×cores → 64 / 16 / 4 micro-batches
-
-
-def _state_metrics(prog: list[dict]) -> dict:
-    """Per-batch state-store cost from the streaming progress events
-    (steady batches only): the serial-section evidence the scaling
-    analysis rests on — commit + update milliseconds and the RocksDB
-    provider's own commit latency, not prose."""
-    steady = [p for p in prog[1:] if int(p.get("numInputRows") or 0) > 0]
-    out: dict[str, float] = {}
-    if not steady:
-        return out
-    for key in ("commitTimeMs", "allUpdatesTimeMs"):
-        vals = [sum(int(so.get(key) or 0) for so in p.get("stateOperators") or []) for p in steady]
-        out[f"{key}_per_batch"] = round(sum(vals) / len(steady), 1)
-    rocks = [
-        sum(
-            int((so.get("customMetrics") or {}).get(m) or 0)
-            for so in p.get("stateOperators") or []
-            for m in ("rocksdbCommitWriteBatchLatency", "rocksdbCommitFlushLatency", "rocksdbCommitCompactLatency")
-        )
-        for p in steady
-    ]
-    out["rocksdb_commit_latency_ms_per_batch"] = round(sum(rocks) / len(steady), 1)
-    # the commit-vs-compute split the Amdahl claim rests on (round-4
-    # judge ask 3): mean per steady batch of each trigger phase, plus
-    # the state commit's share of the whole trigger — numbers, not prose
-    trig = []
-    for key in ("triggerExecution", "addBatch", "walCommit", "commitOffsets", "queryPlanning", "getBatch"):
-        vals = [int((p.get("durationMs") or {}).get(key) or 0) for p in steady]
-        out[f"{key}_ms_per_batch"] = round(sum(vals) / len(steady), 1)
-        if key == "triggerExecution":
-            trig = vals
-    if trig and sum(trig):
-        out["state_commit_share_of_trigger"] = round(
-            out.get("commitTimeMs_per_batch", 0.0) * len(steady) / sum(trig), 3
-        )
-    return out
-
-
-def stream_chain_run(cores: int, state_partitions: int | None = None, trigger: int | None = None) -> dict:
-    """The SAME processor chain as ``chain_run`` executed as a TRUE
-    Structured-Streaming query (file source → validate → fused Arrow
-    decode+features → normalize → watermarked tumbling window agg →
-    exactly-once foreachBatch sink, RocksDB state store) — the
-    north-rule metric in its own terms. processAllAvailable over a
-    fixed file set makes the measurement deterministic.
-
-    Per-level knobs (round-3 judge item 2): the micro-batch size scales
-    with the level (STREAM_TRIGGER) so the fixed per-batch serial
-    section is amortized equally, and shuffle/STATE partitions are
-    sized to the STATE, not the cores: the stateful window agg holds
-    only ~3.4k (window, codec) keys, while the hot path (Arrow decode)
-    gets its parallelism from the SOURCE splits upstream of the
-    shuffle. Each extra state partition is another RocksDB instance
-    committing per batch — measured at 32 cores: 32 state partitions →
-    10.9 s summed commit time per batch and an inverted 16.6k clips/s;
-    8 partitions → 0.76 s and 29.4k clips/s. (The old 2×cores sizing
-    was the round-3 streaming-scaling miss.)
-
-    Reports BOTH end-to-end and STEADY-STATE (micro-batches after the
-    first) throughput: the first batch pays JVM/Python-worker/codegen
-    warm-up that a long-running stream pays once, so steady-state is
-    the long-running job's regime — the same policy the batch chain
-    uses (its warm-up also precedes timing)."""
-    import shutil
-    import tempfile
-
-    # state partitions = min(cores, 4): every state partition is a
-    # RocksDB instance committing per micro-batch, and the windowed agg
-    # holds only ~3.4k (window, codec) keys — parallelism for the
-    # decode hot path comes from SOURCE splits upstream of the
-    # shuffle. Sizing experiment (round 6, pinned, same input):
-    #   8 cores:  sp=8 share 0.495 / 19.9k clips/s → sp=4 0.124 / 22.4k
-    #   32 cores: sp=8 share 0.561 / 10.4k        → sp=4 0.055 / 23.6k
-    #   2 cores:  sp=2 share 0.090 (unchanged by the rule)
-    # share = state-commit ms / trigger ms per steady batch. A state
-    # with orders more keys would size UP with it; this is this
-    # chain's state, measured.
-    spark = _session(
-        cores,
-        shuffle_partitions=state_partitions if state_partitions is not None else min(cores, 4),
-    )
-    from pyspark.sql import functions as F
-
-    from dataflows_spark.functions import audio
-    from dataflows_spark.sources.clips import CLIPS_SCHEMA
-    from dataflows_spark.streaming import ExactlyOnceParquetSink
-    from dataflows_spark.streaming.windows import tumbling_window_agg
-
-    if not os.path.exists(os.path.join(STREAM_SRC, "_SUCCESS")):
-        spark.read.parquet(CLIPS_PATH).repartition(STREAM_FILES).write.mode("overwrite").parquet(STREAM_SRC)
-    # warm page cache + Python workers + codegen outside the timing
-    df = spark.read.parquet(STREAM_SRC)
-    df.select(F.sum(F.length("bytes"))).collect()
-    df.sample(0.02).select(audio.decode_stats("bytes", "codec").alias("st")).select(F.sum("st.rms")).collect()
-
-    tmp = tempfile.mkdtemp(prefix="bench_stream_")
-    sink = ExactlyOnceParquetSink(os.path.join(tmp, "out"))
-    # proportional fallback keeps the --stream-chain CLI usable at any
-    # core count, not just the three benched levels (same 1.5
-    # files/core rule as STREAM_TRIGGER)
-    if trigger is None:
-        trigger = STREAM_TRIGGER.get(cores, max(1, round(1.5 * cores)))
-    sdf = (
-        spark.readStream.schema(CLIPS_SCHEMA)
-        .option("maxFilesPerTrigger", str(trigger))
-        .parquet(STREAM_SRC)
-    )
-    valid = sdf.filter(audio.duration_valid_col())
-    feats = valid.withColumn("st", audio.decode_stats("bytes", "codec")).select(
-        "codec",
-        "event_time",
-        F.col("st.rms").alias("rms"),
-        F.col("st.n_samples").alias("n_samples"),
-        F.trim(F.regexp_replace(F.coalesce("transcript", F.lit("")), r"\s+", " ")).alias("transcript_norm"),
-    )
-    agg = tumbling_window_agg(
-        feats,
-        "event_time",
-        "1 hour",
-        ["codec"],
-        {
-            "n_clips": {"aggregate": "count"},
-            "mean_rms": {"name": "rms", "aggregate": "avg"},
-            "total_samples": {"name": "n_samples", "aggregate": "sum"},
-        },
-        watermark="2 hours",
-    )
-    t0 = time.time()
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(tmp, "cp"))
-        .start()
-    )
-    q.processAllAvailable()
-    elapsed = time.time() - t0
-    prog = [json.loads(p.json) for p in q.recentProgress]
-    q.stop()
-    spark.stop()
-    shutil.rmtree(tmp, ignore_errors=True)
-    clips = sum(int(p.get("numInputRows") or 0) for p in prog)
-    steady = [p for p in prog[1:] if int(p.get("numInputRows") or 0) > 0]
-    steady_clips = sum(int(p["numInputRows"]) for p in steady)
-    steady_sec = sum((p.get("durationMs") or {}).get("triggerExecution", 0) for p in steady) / 1000.0
-    return {
-        "sec": round(elapsed, 2),
-        "clips": clips,
-        "steady_sec": round(steady_sec, 2),
-        "steady_clips": steady_clips,
-        "batches": len(prog),
-        "files_per_trigger": trigger,
-        "state": _state_metrics(prog),
-    }
-
-
-def run_stream_subprocess(cores: int) -> dict:
-    cmd = [
-        "taskset",
-        "-c",
-        f"0-{cores - 1}" if cores > 1 else "0",
-        sys.executable,
-        os.path.abspath(__file__),
-        "--stream-chain",
-        str(cores),
-    ]
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=1800)
-    for line in out.stdout.splitlines():
-        if line.startswith("STREAM_RESULT "):
-            return json.loads(line[len("STREAM_RESULT ") :])
-    raise RuntimeError(f"stream run at {cores} cores produced no result: {out.stdout[-500:]} {out.stderr[-500:]}")
-
-
-def _fft_work(n_iter: int) -> float:
-    import numpy as np
-
-    rng = np.random.default_rng(1)
-    x = rng.standard_normal(4096)
-    s = 0.0
-    for _ in range(n_iter):
-        s += float(np.abs(np.fft.rfft(x)).sum())
-    return s
-
-
-def hw_probe(cores: int) -> float:
-    """ffts/sec of a raw numpy-FFT pool on the level's own pinned core
-    range — a ~2 s Spark-independent contamination detector run right
-    after each sample. A depressed probe (vs the level's best across
-    samples) marks that sample as taken in a contended host window:
-    the round-5 judge's 'noise-bound 32-core legs, third round running'
-    can then be read off the artifact sample-by-sample instead of
-    argued from a later closing run."""
-    import multiprocessing as mp
-
-    total = 20_000 * cores
-    with mp.Pool(cores) as p:
-        t0 = time.time()
-        p.map(_fft_work, [total // cores] * cores)
-        return total / (time.time() - t0)
-
-
-def hw_probe_subprocess(cores: int) -> float:
-    cmd = [
-        "taskset",
-        "-c",
-        f"0-{cores - 1}" if cores > 1 else "0",
-        sys.executable,
-        os.path.abspath(__file__),
-        "--hwprobe",
-        str(cores),
-    ]
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=300)
-    for line in out.stdout.splitlines():
-        if line.startswith("HWPROBE_RESULT "):
-            return float(json.loads(line[len("HWPROBE_RESULT ") :])["ffts_per_sec"])
-    raise RuntimeError(f"hw probe at {cores} cores produced no result: {out.stderr[-300:]}")
-
-
-def hw_ceiling() -> dict:
-    """Raw numpy-FFT multiprocessing scaling — the host's own ceiling,
-    independent of Spark (vCPU overcommit shows up here)."""
-    import multiprocessing as mp
-
-    def run(nproc: int, total: int = 200_000) -> float:
-        with mp.Pool(nproc) as p:
-            t0 = time.time()
-            p.map(_fft_work, [total // nproc] * nproc)
-            return total / (time.time() - t0)
-
-    r = {n: run(n) for n in (2, 8, 32)}
-    return {
-        "ffts_per_sec": {str(k): round(v) for k, v in r.items()},
-        "eff_2_to_8": round((r[8] / r[2]) / 4, 3),
-        "eff_8_to_32": round((r[32] / r[8]) / 4, 3),
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -504,7 +160,7 @@ def run_audio_neardup_tier(n: int | None = None) -> dict:
     from dataflows_spark.sources.clips import clips_df
 
     n = n or max(int(80_000 * SF), 2000)  # 8k clips at the default sf0.1
-    spark = _session(CPUS)
+    spark = _session()
     base = clips_df(spark, n, seed=42, dur_min=1000, dur_max=3000).select(
         "clip_id", "bytes", "codec", "sr_hz"
     )
@@ -541,121 +197,6 @@ def run_audio_neardup_tier(n: int | None = None) -> dict:
     }
 
 
-def run_audio_dedup_stream_tier(n: int | None = None, n_batches: int = 8) -> dict:
-    """StreamingAudioDeduper (streaming/audio_dedup.py — the audio
-    member of the incremental-dedup sink family) per-micro-batch: n
-    base clips in n_batches id-ordered micro-batches through a real
-    readStream/foreachBatch query; the FINAL batch additionally carries
-    ~5% planted near-dups (ulaw re-encode + 0.9x gain, fresh ids) of
-    originals spread over the earlier batches, so every planted copy
-    must be recalled against the ACCUMULATED index (x33 bit-flip probe
-    expansion -> Bloom screen -> pruned read -> BER verify). Records
-    per-batch trigger seconds + pruned-read bytes (growth_median_ratio
-    over the dup-free span = flatness evidence, same protocol as the
-    text/vector sinks) plus planted recall and survivor exactness as
-    the correctness check."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from dataflows_spark.sources.clips import clips_df
-    from dataflows_spark.streaming import StreamingAudioDeduper
-
-    n = n or max(int(24_000 * SF), 800)  # 2400 clips at the default sf0.1
-    spark = _session(CPUS)
-    base = (
-        clips_df(spark, n, seed=7, dur_min=1000, dur_max=3000)
-        .select(
-            "clip_id",
-            "bytes",
-            "codec",
-            "sr_hz",
-            F.split("clip_id", "-").getItem(1).cast("long").alias("ord"),
-        )
-    )
-
-    batch_size = n // n_batches
-    # planted: copies of originals from batches 0..n_batches-2 only, so
-    # each recall is strictly cross-batch against the accumulated index
-    planted = (
-        base.filter(F.col("ord") < n - batch_size)
-        .filter(F.pmod(F.xxhash64("clip_id"), F.lit(20)) == 0)
-        .select(
-            F.concat(F.col("clip_id"), F.lit("-re")).alias("clip_id"),
-            _ulaw_reencode()("bytes", "codec").alias("bytes"),
-            F.lit("ulaw").alias("codec"),
-            "sr_hz",
-            F.lit(n).cast("long").alias("ord"),
-        )
-    )
-    cols = ["clip_id", "bytes", "codec", "sr_hz"]
-    tmp = tempfile.mkdtemp(prefix="bench_audio_stream_")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    for b in range(n_batches):
-        part = base.filter(
-            (F.col("ord") >= b * batch_size)
-            & (F.col("ord") < ((b + 1) * batch_size if b < n_batches - 1 else n))
-        ).select(*cols)
-        if b == n_batches - 1:
-            part = part.unionByName(planted.select(*cols))
-        part.coalesce(1).write.mode("append").parquet(in_dir)
-    n_planted = planted.count()
-
-    sink = StreamingAudioDeduper(
-        os.path.join(tmp, "out"), num_buckets=16, collect_metrics=True, compact_every=4
-    )
-    sdf = (
-        spark.readStream.schema("clip_id string, bytes binary, codec string, sr_hz int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    q = (
-        sdf.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(tmp, "cp"))
-        .start()
-    )
-    t0 = time.time()
-    q.processAllAvailable()
-    elapsed = time.time() - t0
-    prog = [json.loads(p.json) for p in q.recentProgress]
-    q.stop()
-    per_batch = [
-        round((p.get("durationMs") or {}).get("triggerExecution", 0) / 1000.0, 3)
-        for p in prog
-        if int(p.get("numInputRows") or 0) > 0
-    ]
-    survivors = {r["clip_id"] for r in sink.read(spark).select("clip_id").collect()}
-    base_ids = {r["clip_id"] for r in base.select("clip_id").collect()}
-    planted_ids = {r["clip_id"] for r in planted.select("clip_id").collect()}
-    dropped_planted = sum(1 for p in planted_ids if p not in survivors)
-    shutil.rmtree(tmp, ignore_errors=True)
-    spark.stop()
-    mb = 1024 * 1024
-    return {
-        "n_clips": n + n_planted,
-        "n_planted": n_planted,
-        "n_batches": n_batches,
-        "sec_total": round(elapsed, 2),
-        "per_batch_sec": per_batch,
-        "clips_per_sec": round((n + n_planted) / elapsed, 1),
-        "survivors": len(survivors),
-        # every base clip must survive (no false drops), every planted
-        # re-encode must be recalled against the accumulated index
-        "false_drops": len(base_ids - survivors),
-        "planted_recall": round(dropped_planted / max(1, n_planted), 4),
-        "read_mb_per_batch": [
-            round(m["index_read_bytes"] / mb, 2) for m in sink.batch_metrics
-        ],
-        "index_total_mb_per_batch": [
-            round(m["index_total_bytes"] / mb, 2) for m in sink.batch_metrics
-        ],
-        "growth_median_ratio": _median_growth(per_batch),
-    }
-
-
 def run_sf1_tier() -> dict:
     """Dedup/ANN operators at 120k docs / 120k×64 vectors: wall-clock +
     result cardinalities (the cardinalities double as sanity checks that
@@ -680,7 +221,7 @@ def run_sf1_tier() -> dict:
     from dataflows_spark.functions import dedup as ddp
     from dataflows_spark.functions import similarity as sim
 
-    spark = _session(CPUS)
+    spark = _session()
     ensure_sf1(spark)
     docs = spark.read.parquet(SF1_DOCS_PATH)
     emb = spark.read.parquet(SF1_EMB_PATH)
@@ -833,7 +374,7 @@ def run_streaming_curation_tier(n_batches: int = 24) -> dict:
 
     from dataflows_spark.streaming import StreamingCorpusCleaner, StreamingEmbeddingDeduper
 
-    spark = _session(CPUS)
+    spark = _session()
     ensure_sf1(spark)
     out: dict[str, dict] = {}
 
@@ -943,22 +484,22 @@ def run_streaming_curation_tier(n_batches: int = 24) -> dict:
 # operating point the sizing rule describes: batch keys ≪ num_buckets,
 # with num_buckets re-provisioned ∝ corpus via rebucket_index() as the
 # corpus grows (the documented migration, exercised here for real). The
-# recorded read-bytes series must stay ~flat while the index grows 3× —
+# recorded read-bytes series must stay ~flat while the index grows —
 # pruning engaging, measured at the filesystem level.
 # ---------------------------------------------------------------------------
 
 PRUNE_DEMO_BATCH = 100  # docs per micro-batch → ~200 band keys ≪ buckets
-PRUNE_DEMO_PHASES = [(512, 12), (1024, 12), (1536, 12)]  # (num_buckets, batches)
+PRUNE_DEMO_PHASES = [(512, 12), (1024, 12)]  # (num_buckets, batches)
 
 
 def run_curation_pruning_demo(phases: list[tuple[int, int]] | None = None) -> dict:
-    """36 × 100-doc micro-batches through StreamingCorpusCleaner with
-    num_buckets ∝ corpus (512 → 1024 → 1536 via ``rebucket_index``
+    """24 × 100-doc micro-batches through StreamingCorpusCleaner with
+    num_buckets ∝ corpus (512 → 1024 via ``rebucket_index``
     between phases, stream stopped — the sizing rule's real migration
     path). At this keys≪buckets ratio each batch's pruned read touches
     ~``1-exp(-keys/buckets)`` of the buckets (~10-30%), and holding
     keys×corpus/num_buckets ~constant keeps the read-bytes series flat
-    while the corpus triples — the sub-linear-read evidence the
+    while the corpus grows — the sub-linear-read evidence the
     32-bucket tier's regime can't show. Operating point per the judge's
     prescription (num_buckets ≥ 512, small batches); bucket counts stay
     modest because each per-batch index write creates O(touched
@@ -977,7 +518,7 @@ def run_curation_pruning_demo(phases: list[tuple[int, int]] | None = None) -> di
     from dataflows_spark.streaming.curation import rebucket_index
 
     phases = phases or PRUNE_DEMO_PHASES
-    spark = _session(CPUS)
+    spark = _session()
     ensure_sf1(spark)
     n_docs = PRUNE_DEMO_BATCH * sum(n for _, n in phases)
     # ids < 24000 sit far from the sf1 planted-duplicate tail → every
@@ -1058,7 +599,7 @@ def run_curation_pruning_demo(phases: list[tuple[int, int]] | None = None) -> di
         "read_fraction_last_phase": (
             round(med(read_mb[-8:]) / med(total_mb[-8:]), 3) if med(total_mb[-8:]) else None
         ),
-        # sub-linearity: reads ~flat (ratio ≈ 1) while the index grew 3×
+        # sub-linearity: reads ~flat (ratio ≈ 1) while the index grew
         "read_growth_last_over_first": (
             round(med(last_reads) / med(first_reads), 2) if first_reads and last_reads else None
         ),
@@ -1071,8 +612,8 @@ def run_curation_pruning_demo(phases: list[tuple[int, int]] | None = None) -> di
 
 # ---------------------------------------------------------------------------
 # sf10 streaming curation (judge round-5 item 4): the 100× claim made
-# measurable — 1.2M docs through the SAME streaming cleaner, 24 batches
-# of 50k docs, compaction on. num_buckets follows the sizing rule
+# measurable — 1.2M docs through the SAME streaming cleaner, 12 batches
+# of 100k docs, compaction on. num_buckets follows the sizing rule
 # (∝ corpus: 32 buckets at 120k docs → 320 at 1.2M; 4096 was measured
 # and rejected — the per-batch partitioned WRITE cost scales with the
 # provisioned dir count, 2→10 s/table, and dominates before read
@@ -1087,7 +628,7 @@ def run_curation_pruning_demo(phases: list[tuple[int, int]] | None = None) -> di
 # ---------------------------------------------------------------------------
 
 
-def run_streaming_curation_sf10(n_batches: int = 24) -> dict:
+def run_streaming_curation_sf10(n_batches: int = 12) -> dict:
     import shutil
     import tempfile
 
@@ -1095,7 +636,7 @@ def run_streaming_curation_sf10(n_batches: int = 24) -> dict:
 
     from dataflows_spark.streaming import StreamingCorpusCleaner
 
-    spark = _session(CPUS)
+    spark = _session()
     _ensure_doc_corpus(spark, SF10_N, SF10_DOCS_PATH, SF10_EMB_PATH)
     docs = spark.read.parquet(SF10_DOCS_PATH)
     tmp = tempfile.mkdtemp(prefix="bench_cur_sf10_")
@@ -1170,7 +711,7 @@ def run_streaming_curation_sf10(n_batches: int = 24) -> dict:
 def run_headline_queries() -> dict[str, float]:
     import __spark_entry__ as entrymod
 
-    spark = _session(CPUS)
+    spark = _session()
     qs = entrymod.queries()
     out: dict[str, float] = {}
     for name in HEADLINE:
@@ -1184,456 +725,31 @@ def run_headline_queries() -> dict[str, float]:
     return out
 
 
-def compare_block(result: dict, baseline_path: str) -> dict:
-    """Per-query regression check vs a prior BENCH_r{N}.json: ratios
-    current/previous, flagging anything >1.3× slower (the round-round
-    discipline mandated by the round-1 verdict #10). Host steal-time
-    makes single readings wobble — see BENCH/BASELINE.md — so flags are
-    a review trigger, not an automatic failure."""
-    with open(baseline_path) as fh:
-        prev = json.load(fh)
-    # driver-recorded BENCH_r{N}.json wraps the line under "parsed" —
-    # which is NULL when the stdout tail overflowed (BENCH_r03); treat
-    # that as an empty baseline rather than crashing post-measurement
-    prev = prev.get("parsed") or prev if isinstance(prev, dict) else {}
-    pq = prev.get("queries", {})
-    ratios = {}
-    regressions = []
-    for name, sec in result["queries"].items():
-        if name in pq and pq[name] > 0:
-            r = round(sec / pq[name], 3)
-            ratios[name] = r
-            if r > 1.3:
-                regressions.append(name)
-    headline_ratio = None
-    if prev.get("value"):
-        # prev/cur throughput: >1 means THIS run is slower — same
-        # direction as the per-query ratios (judge round-2 nit #6:
-        # the old name 'headline_throughput_vs_prev' read backwards)
-        headline_ratio = round(prev["value"] / max(result["value"], 1e-9), 3)
-    block = {
-        "baseline": os.path.basename(baseline_path),
-        "per_query_ratio_cur_over_prev": ratios,
-        "regressions_gt_1p3x": regressions,
-        "headline_slowdown_vs_prev": headline_ratio,
-    }
-    print(f"-- compare vs {baseline_path} --", file=sys.stderr)
-    for name in sorted(ratios):
-        flag = "  <-- REGRESSION" if name in regressions else ""
-        print(f"{name:>24}: {pq[name]:7.3f}s -> {result['queries'][name]:7.3f}s  x{ratios[name]:.2f}{flag}", file=sys.stderr)
-    return block
-
-
-def _phases(full: bool) -> dict:
-    """The post-sampling phases in run order, name → callable: the
-    default sweep runs them all, ``--only <name>`` runs one."""
-    return {
-        "queries": run_headline_queries,
-        "sf1_dedup_ann": run_sf1_tier,
-        "audio_neardup": run_audio_neardup_tier,
-        "audio_dedup_stream": run_audio_dedup_stream_tier,
-        "streaming_curation": run_streaming_curation_tier,
-        "curation_pruning_demo": lambda: run_curation_pruning_demo(
-            None if full else PRUNE_DEMO_PHASES[:2]
-        ),
-        "streaming_curation_sf10": lambda: run_streaming_curation_sf10(24 if full else 12),
-    }
+PHASES = {
+    "queries": run_headline_queries,
+    "sf1_dedup_ann": run_sf1_tier,
+    "audio_neardup": run_audio_neardup_tier,
+    "streaming_curation": run_streaming_curation_tier,
+    "curation_pruning_demo": run_curation_pruning_demo,
+    "streaming_curation_sf10": run_streaming_curation_sf10,
+}
 
 
 def main() -> None:
-    if len(sys.argv) >= 2 and sys.argv[1] == "--hwprobe":
-        print("HWPROBE_RESULT " + json.dumps({"ffts_per_sec": round(hw_probe(int(sys.argv[2])))}))
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--chain":
-        cores, timed_runs = int(sys.argv[2]), int(sys.argv[3])
-        sec, n = chain_run(cores, timed_runs)
-        print("CHAIN_RESULT " + json.dumps({"cores": cores, "sec": round(sec, 2), "clips": n}))
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--stream-chain":
-        cores = int(sys.argv[2])
-        sp = int(sys.argv[3]) if len(sys.argv) > 3 else None
-        tr = int(sys.argv[4]) if len(sys.argv) > 4 else None
-        r = stream_chain_run(cores, state_partitions=sp, trigger=tr)
-        r["cores"] = cores
-        print("STREAM_RESULT " + json.dumps(r))
-        return
+    parser = argparse.ArgumentParser(description="Run the bench tiers perfbench does not.")
+    parser.add_argument("--only", choices=PHASES, help="run this tier alone")
+    only = parser.parse_args().only
+    sys.path.append(os.path.join(REPO, "perfbench"))
+    from run import host_block
 
-    full = "--full" in sys.argv
-    phases = _phases(full)
-    if "--only" in sys.argv:
-        name = (sys.argv[sys.argv.index("--only") + 1 :] or [None])[0]
-        if name not in phases:
-            sys.exit(f"--only takes one of: {', '.join(phases)}")
-        print(json.dumps({name: phases[name]()}))
-        return
-
-    compare_to = None
-    if "--compare" in sys.argv:
-        compare_to = sys.argv[sys.argv.index("--compare") + 1]
-    # each level runs pinned to its own cores: a level above the host's
-    # CPU count would silently oversubscribe and still be labelled N cores
-    LEVELS = (32, 8, 2)
-    host_cpus = len(os.sched_getaffinity(0))
-    if max(LEVELS) > host_cpus:
-        sys.exit(
-            f"the default sweep pins levels {LEVELS} but this host has {host_cpus} CPUs; "
-            "run perfbench/run.py, or one phase with --only"
-        )
-    ensure_clips()
-    # INTERLEAVED level sampling (round-4 judge ask 2): the old
-    # per-level sequential blocks let one contended host window poison
-    # a whole level's official number (r4 driver headline 45.4k vs
-    # 88.3k for the committed closing run of identical code — the
-    # 32-core block landed in a contended window). Now each round
-    # cycles 32→8→2 for both chains and the MEDIAN sample per level is
-    # the official number: a contended window can hit at most one
-    # sample per level, and the per-sample series stays in the
-    # artifact so the spread is visible.
-    ROUNDS = 3
-    chain_samples: dict[int, list[dict]] = {c: [] for c in LEVELS}
-    stream_samples: dict[int, list[dict]] = {c: [] for c in LEVELS}
-
-    # an hour of measurement must survive a late-phase crash OR a
-    # driver timeout: every completed phase lands in
-    # BENCH/partial_run.json immediately, the cumulative full object
-    # lands in BENCH/last_run.json, AND a cumulative compact JSON line
-    # is PRINTED after every phase — the driver keeps only the stdout
-    # tail and parses the last line, so with per-phase printing a
-    # timeout records everything measured so far instead of nothing
-    # (BENCH_r06 was rc=124/parsed=null because the only print happened
-    # after every phase finished)
-    partial: dict = {}
-    phase_sec: dict[str, float] = {}
-    hw_holder: dict = {}
-
-    def checkpoint_phase(name, value) -> None:
-        partial[name] = value
-        os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-        with open(os.path.join(REPO, "BENCH", "partial_run.json"), "w") as fh:
-            json.dump(partial, fh, indent=1)
-
-    result: dict = {
-        "metric": "clips/sec end-to-end on windowed audio processor-chain (validate→decode+features→normalize→window agg), SF=0.1",
-        "unit": "clips/sec",
-        "sf": SF,
-        "complete": False,
-        "sweep": "full" if full else "default (sf10 12 batches, pruning demo 2 phases; --full for 24/3)",
-        "phase_sec": phase_sec,
-    }
-
-    def persist() -> None:
-        os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    result: dict = {"host": host_block(), "sf": SF, "phase_sec": {}}
+    for name, fn in ({only: PHASES[only]} if only else PHASES).items():
+        t0 = time.time()
+        result[name] = fn()
+        result["phase_sec"][name] = round(time.time() - t0, 1)
         with open(os.path.join(REPO, "BENCH", "last_run.json"), "w") as fh:
             json.dump(result, fh, indent=1)
-
-    def emit() -> None:
-        """Persist the cumulative full object and print ONE compact JSON
-        line (≤ ~1.8k chars — the driver's stdout capture window)."""
-        persist()
-        compact: dict = {"metric": result["metric"], "unit": result["unit"], "sf": result["sf"]}
-        for k in ("value", "value_ceiling_normalized_estimate"):
-            if k in result:
-                compact[k] = result[k]
-        if "queries" in result:
-            compact["queries"] = result["queries"]
-        sc = result.get("scaling")
-        if sc:
-            compact["scaling"] = {
-                k: sc[k]
-                for k in (
-                    "north_rule_efficiency_n_to_4n",
-                    "clips_per_sec",
-                    "efficiency_8_to_32_vs_hw_ceiling",
-                    "contaminated_samples",
-                )
-                if k in sc
-            }
-        ss = result.get("streaming_scaling")
-        if ss:
-            compact["streaming_scaling"] = {
-                k: ss[k]
-                for k in (
-                    "north_rule_efficiency_n_to_4n_steady",
-                    "north_rule_efficiency_n_to_4n_steady_raw",
-                    "clips_per_sec_steady",
-                )
-                if k in ss
-            }
-        sf1 = result.get("sf1_dedup_ann")
-        if sf1:
-            compact["sf1_dedup_ann"] = {
-                "warmup_sec": sf1["warmup_sec"],
-                "sec": {
-                    k: sf1["sec"][k]
-                    for k in ("exact_dedup", "minhash_lsh_pairs", "jaccard_pairs", "jaccard_pairs_lazy")
-                    if k in sf1["sec"]
-                },
-            }
-        adp = result.get("audio_neardup")
-        if adp:
-            compact["audio_neardup"] = {
-                k: adp[k] for k in ("sec", "planted_recall", "clips_per_sec", "n_clips")
-            }
-        ads = result.get("audio_dedup_stream")
-        if ads:
-            compact["audio_dedup_stream"] = {
-                k: ads[k]
-                for k in ("planted_recall", "false_drops", "growth_median_ratio", "clips_per_sec")
-            }
-        cur = result.get("streaming_curation")
-        if cur:
-            compact["streaming_curation_growth"] = {
-                k: v.get("growth_median_ratio") for k, v in cur.items()
-            }
-        pdemo = result.get("curation_pruning_demo")
-        if pdemo:
-            compact["curation_pruning_demo"] = {
-                k: pdemo[k]
-                for k in (
-                    "read_fraction_last_phase",
-                    "read_growth_last_over_first",
-                    "index_growth_last_over_first",
-                    "growth_median_ratio",
-                )
-            }
-        s10 = result.get("streaming_curation_sf10")
-        if s10:
-            compact["streaming_curation_sf10"] = {
-                k: s10[k] for k in ("growth_median_ratio", "sec_total", "survivors")
-            }
-        if "compare" in result:
-            compact["regressions_gt_1p3x"] = (result.get("compare") or {}).get("regressions_gt_1p3x")
-        compact["complete"] = result["complete"]
-        compact["full_result"] = "BENCH/last_run.json"
-        print(json.dumps(compact), flush=True)
-
-    def take_sample(c: int) -> None:
-        # timed_runs ≥ 2: one timed pass is NOT past warm-up for the
-        # wide levels — successive full passes in one fresh process
-        # measured 26.9 → 17.3 → 7.0 s at 32 cores (tiered JIT of the
-        # whole-stage-codegen'd pipeline + 32 Arrow workers warming
-        # across passes; the 3%-sample warm-up only primes a few).
-        # The rounds-4/5 "noise-bound 32-core legs" were exactly this
-        # warm-up tail: probes healthy, guest 70% idle, samples 5-10×
-        # under the steady state. Best-of-K after warm-up is the
-        # documented policy (the steady regime a long-running job
-        # operates in) — restored here per level: K=3 at 8/32, K=2 at
-        # the (slow, less warm-up-sensitive) 2-core level.
-        chain_samples[c].append(run_chain_subprocess(c, 3 if c >= 8 else 2))
-        stream_samples[c].append(run_stream_subprocess(c))
-        # concurrent-ceiling probe, pinned to the SAME core range,
-        # immediately after the pair — each sample carries its own
-        # host-contention evidence (round-5 judge ask #2). A probe
-        # failure is an UNKNOWN reading (None), never a run abort: the
-        # samples it would have annotated already succeeded (round-6
-        # advice #3)
-        try:
-            probe = round(hw_probe_subprocess(c))
-        except Exception as e:
-            print(f"hw probe failed at {c} cores (recorded as unknown): {e}", file=sys.stderr)
-            probe = None
-        chain_samples[c][-1]["hw_probe_ffts_per_sec"] = probe
-        stream_samples[c][-1]["hw_probe_ffts_per_sec"] = probe
-
-    def _chain_thr(r: dict) -> float:
-        return r["clips"] / max(r["sec"], 1e-9)
-
-    def _steady_thr(r: dict) -> float:
-        return r["steady_clips"] / max(r["steady_sec"], 1e-9)
-
-    def _level_stats(samples: list[dict], thr) -> dict:
-        """Raw + contamination-flag-aware medians for one level.
-
-        A sample whose concurrent FFT ceiling sits >20% below the
-        level's best-across-samples ran in a contended host window —
-        flagged by its OWN probe. The OFFICIAL median excludes flagged
-        samples (round-6 judge ask #5: the r6 driver partial's
-        streaming 2→8 read 0.73 raw purely because one @8 sample with a
-        56%-depressed probe dragged the median; 0.83 flag-filtered);
-        the raw median is published alongside, never hidden. Probe=None
-        (probe subprocess failed) is unknown: excluded from the maximum
-        and never flagged. All-flagged degrades to raw."""
-        probes = [s.get("hw_probe_ffts_per_sec") for s in samples]
-        known = [p for p in probes if p]
-        pmax = max(known) if known else None
-        flags = [bool(pmax and p and p < 0.8 * pmax) for p in probes]
-        clean = [s for s, f in zip(samples, flags) if not f] or list(samples)
-
-        def med(ss):
-            return sorted(ss, key=thr)[len(ss) // 2]
-
-        return {"raw": med(samples), "clean": med(clean), "flags": flags, "probe_max": pmax}
-
-    def refresh_scaling() -> None:
-        """Rebuild headline + both scaling blocks from the samples
-        collected SO FAR (called after every interleaved round, so a
-        timeout mid-sampling still records a medians-so-far headline)."""
-        cstats = {c: _level_stats(chain_samples[c], _chain_thr) for c in LEVELS}
-        sstats = {c: _level_stats(stream_samples[c], _steady_thr) for c in LEVELS}
-        thr = {c: _chain_thr(cstats[c]["clean"]) for c in LEVELS}
-        thr_raw = {c: _chain_thr(cstats[c]["raw"]) for c in LEVELS}
-        sthr = {c: _steady_thr(sstats[c]["clean"]) for c in LEVELS}
-        sthr_raw = {c: _steady_thr(sstats[c]["raw"]) for c in LEVELS}
-        r32, s32 = cstats[32]["clean"], sstats[32]["clean"]
-        hw = hw_holder or None
-        result["value"] = round(thr[32], 1)
-        # ESTIMATE, not a measurement (round-6 advice #4): the raw
-        # headline multiplied by (best probe across the level's samples
-        # / the chosen sample's probe) ASSUMES chain throughput scales
-        # linearly with the concurrent-FFT ceiling — what the same code
-        # would read on an uncontended host. The raw `value` above is
-        # the unambiguous measured headline.
-        if cstats[32]["probe_max"] and r32.get("hw_probe_ffts_per_sec"):
-            result["value_ceiling_normalized_estimate"] = round(
-                thr[32] * cstats[32]["probe_max"] / r32["hw_probe_ffts_per_sec"], 1
-            )
-        median_policy = (
-            "official medians exclude contamination-flagged samples (probe >20% below "
-            "level best); *_raw_median keeps every sample; flags + per-sample series published"
-        )
-        scaling = {
-            # north-rule criterion (≥0.8 at N→4N): measured in the
-            # host's linear regime (2→8 cores); >1.0 readings are
-            # clamped (host-noise artifacts on the slow leg)
-            "north_rule_efficiency_n_to_4n": round(min((thr[8] / thr[2]) / 4, 1.0), 3),
-            "north_rule_efficiency_n_to_4n_raw": round(min((thr_raw[8] / thr_raw[2]) / 4, 1.0), 3),
-            "clips": r32["clips"],
-            "sec": {str(c): cstats[c]["clean"]["sec"] for c in LEVELS},
-            "clips_per_sec": {str(c): round(thr[c], 1) for c in (2, 8, 32)},
-            "clips_per_sec_raw_median": {str(c): round(thr_raw[c], 1) for c in (2, 8, 32)},
-            "efficiency_2_to_8": round((thr[8] / thr[2]) / 4, 3),
-            "efficiency_8_to_32": round((thr[32] / thr[8]) / 4, 3),
-            "samples_clips_per_sec": {
-                str(c): [round(_chain_thr(r), 1) for r in chain_samples[c]] for c in LEVELS
-            },
-            "samples_hw_probe_ffts_per_sec": {
-                str(c): [s.get("hw_probe_ffts_per_sec") for s in chain_samples[c]] for c in LEVELS
-            },
-            "contaminated_samples": {str(c): cstats[c]["flags"] for c in LEVELS},
-            "median_policy": median_policy,
-            "note": "each level runs CPU-pinned (taskset) in its own process; interleaved 3 rounds x (32,8,2) + 2 extra 32-core samples (K=5 at the historically noisy level), flag-aware median per level; each sample carries its concurrent FFT-ceiling probe; see BENCH/BASELINE.md",
-        }
-        if hw:
-            scaling["hw_ceiling"] = hw
-            scaling["efficiency_8_to_32_vs_hw_ceiling"] = round(
-                ((thr[32] / thr[8]) / 4) / max(hw["eff_8_to_32"], 1e-9), 3
-            )
-        streaming = {
-            # the SAME chain as a true Structured-Streaming query
-            # (watermarked window agg, RocksDB state, exactly-once
-            # foreachBatch sink) at three parallelism levels — the
-            # north-rule criterion in streaming terms. steady = after
-            # the first (warm-up) micro-batch, the long-running regime;
-            # the non-scaling component is the fixed per-micro-batch
-            # serial section (offsets/state/commit bookkeeping), which
-            # production-sized micro-batches amortize.
-            "clips_per_sec_end_to_end": {
-                str(c): round(sstats[c]["clean"]["clips"] / sstats[c]["clean"]["sec"], 1)
-                for c in LEVELS
-            },
-            "clips_per_sec_steady": {str(c): round(sthr[c], 1) for c in (2, 8, 32)},
-            "clips_per_sec_steady_raw_median": {str(c): round(sthr_raw[c], 1) for c in (2, 8, 32)},
-            "sec": {str(c): sstats[c]["clean"]["sec"] for c in LEVELS},
-            "clips": s32["clips"],
-            "files_per_trigger": {str(c): STREAM_TRIGGER[c] for c in (2, 8, 32)},
-            "samples_clips_per_sec_steady": {
-                str(c): [round(_steady_thr(r), 1) for r in stream_samples[c]] for c in LEVELS
-            },
-            "samples_hw_probe_ffts_per_sec": {
-                str(c): [s.get("hw_probe_ffts_per_sec") for s in stream_samples[c]] for c in LEVELS
-            },
-            "contaminated_samples": {str(c): sstats[c]["flags"] for c in LEVELS},
-            "median_policy": median_policy,
-            "protocol": "interleaved 3 rounds x (32,8,2) + 2 extra 32-core samples (K=5 at the noisy level), flag-aware median per level; per-sample pinned FFT ceiling probe; rows/trigger proportional to cores",
-            # state-store cost per steady micro-batch at each level —
-            # the serial-section evidence behind the scaling analysis
-            "state_ms_per_batch": {str(c): sstats[c]["clean"].get("state", {}) for c in LEVELS},
-            "north_rule_efficiency_n_to_4n_steady": round(min((sthr[8] / sthr[2]) / 4, 1.0), 3),
-            "north_rule_efficiency_n_to_4n_steady_raw": round(
-                min((sthr_raw[8] / sthr_raw[2]) / 4, 1.0), 3
-            ),
-            "efficiency_8_to_32_steady": round((sthr[32] / sthr[8]) / 4, 3),
-        }
-        if s32.get("hw_probe_ffts_per_sec") and sstats[32]["probe_max"]:
-            # same linear-scaling ASSUMPTION as the headline estimate
-            streaming["steady_32_ceiling_normalized_estimate"] = round(
-                sthr[32] * sstats[32]["probe_max"] / s32["hw_probe_ffts_per_sec"], 1
-            )
-        if hw:
-            # normalized to the concurrently-measured hardware ceiling of
-            # this overcommitted guest (raw FFT multiprocessing) — the
-            # same lens the batch chain reports for the saturated pair
-            streaming["efficiency_8_to_32_steady_vs_hw_ceiling"] = round(
-                ((sthr[32] / sthr[8]) / 4) / max(hw["eff_8_to_32"], 1e-9), 3
-            )
-        result["scaling"] = scaling
-        result["streaming_scaling"] = streaming
-
-    # ---- sampling: 3 interleaved rounds over all levels + 2 extra
-    # 32-core samples (K=5 at the one level that has been noise-bound
-    # three rounds running) ----
-    for _rnd in range(ROUNDS):
-        t0 = time.time()
-        for c in LEVELS:
-            take_sample(c)
-        phase_sec[f"samples_round_{_rnd}"] = round(time.time() - t0, 1)
-        checkpoint_phase(
-            f"samples_round_{_rnd}",
-            {
-                "chain": {str(c): chain_samples[c] for c in LEVELS},
-                "stream": {str(c): stream_samples[c] for c in LEVELS},
-            },
-        )
-        refresh_scaling()
-        emit()
-    for _rnd in range(2):
-        t0 = time.time()
-        take_sample(32)
-        phase_sec[f"samples_extra32_{_rnd}"] = round(time.time() - t0, 1)
-        checkpoint_phase(
-            f"samples_extra32_{_rnd}", {"chain": chain_samples[32], "stream": stream_samples[32]}
-        )
-        refresh_scaling()
-        emit()
-
-    # ---- post-sampling phases, cheapest / most-diagnostic first; each
-    # one checkpoints, persists and re-prints the cumulative compact
-    # line so a driver timeout truncates the record, never voids it ----
-    def run_phase(name: str, fn, attach: str | None = None):
-        t0 = time.time()
-        val = fn()
-        phase_sec[name] = round(time.time() - t0, 1)
-        checkpoint_phase(name, val)
-        result[attach or name] = val
-        return val
-
-    hw_holder.update(run_phase("hw_ceiling", hw_ceiling, attach="hw_ceiling_probe"))
-    del result["hw_ceiling_probe"]  # lives inside scaling.hw_ceiling
-    refresh_scaling()
-    emit()
-    for name, fn in phases.items():
-        run_phase(name, fn)
-        emit()
-
-    result["complete"] = True
-    if compare_to is None:
-        # default: diff against the most recent round whose artifact is
-        # machine-parseable (r03's parsed was null — tail overflow)
-        for f in sorted(
-            (f for f in os.listdir(REPO) if f.startswith("BENCH_r") and f.endswith(".json")),
-            reverse=True,
-        ):
-            with open(os.path.join(REPO, f)) as fh:
-                rec = json.load(fh)
-            if rec.get("parsed") or rec.get("queries"):
-                compare_to = os.path.join(REPO, f)
-                break
-    if compare_to:
-        try:
-            result["compare"] = compare_block(result, compare_to)
-        except Exception as e:  # a broken baseline must not lose the run
-            result["compare"] = {"error": f"{type(e).__name__}: {e}", "baseline": compare_to}
-    emit()
+        print(json.dumps({name: result[name]}), flush=True)
 
 
 if __name__ == "__main__":

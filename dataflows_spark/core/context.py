@@ -92,11 +92,8 @@ def build_session(
     if pkg_root not in existing.split(os.pathsep):
         os.environ["PYTHONPATH"] = f"{pkg_root}{os.pathsep}{existing}" if existing else pkg_root
 
-    if master is None:
-        cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
-        master = f"local[{cores}]"
-    elif cores is None:
-        cores = 32
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    master = master or f"local[{cores}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
     builder = (

@@ -560,7 +560,8 @@ def _index_tables(path: str) -> list[_BucketedIndex]:
     fps/bands/docs tables under ``state/index/``;
     ``StreamingEmbeddingDeduper``: one table directly AT
     ``state/index``) — into loaded :class:`_BucketedIndex` objects,
-    reconstructed entirely from the persisted metadata."""
+    reconstructed from the persisted metadata; a table builds Bloom
+    sidecars only when one of its batch dirs already has them."""
 
     def is_table(d: str) -> bool:
         return os.path.exists(os.path.join(d, "_index_meta.json"))
@@ -591,11 +592,12 @@ def _index_tables(path: str) -> list[_BucketedIndex]:
             meta = json.load(fh)
         out.append(
             _BucketedIndex(
-                t,
-                meta["bucket_col"],
-                meta["num_buckets"],
-                meta["key_name"],
+                t, meta["bucket_col"], meta["num_buckets"], meta["key_name"],
                 {k: v for k, v in meta.items() if k not in reserved},
+                build_blooms=any(
+                    os.path.isdir(os.path.join(b, bloom.SIDECAR))
+                    for _, b in bloom.partition_dirs(t)
+                ),
             )
         )
     return out

@@ -1,5 +1,6 @@
 """Dead-code guard: every top-level ``def``/``class`` under
-``dataflows_spark/`` must be named somewhere other than its own
+``dataflows_spark/``, in ``bench.py``, ``scripts/*.py`` and
+``__spark_entry__.py`` must be named somewhere other than its own
 definition — in the package, the tests, the scripts, the benchmarks or
 ``__spark_entry__.py``. Names are read from the syntax tree (identifiers,
 attributes and imported names), so a mention in a docstring or comment
@@ -14,6 +15,7 @@ from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "dataflows_spark"
+TOP_LEVEL = ("bench.py", "__spark_entry__.py")
 
 
 def _tracked_py() -> list[str]:
@@ -44,15 +46,16 @@ def _names(node: ast.AST) -> list[str]:
 
 
 def unreferenced() -> list[str]:
-    """``path:line name`` of every top-level def/class under the package
-    that no tracked .py file names outside that definition."""
+    """``path:line name`` of every top-level def/class under the package,
+    the scripts and the top-level entry files that no tracked .py file
+    names outside that definition."""
     used: Counter = Counter()
     defs = []
     for rel in _tracked_py():
         with open(os.path.join(REPO, rel), encoding="utf-8") as fh:
             tree = ast.parse(fh.read())
         used.update(_names(tree))
-        if rel.startswith(PKG + "/"):
+        if rel.startswith(PKG + "/") or os.path.dirname(rel) == "scripts" or rel in TOP_LEVEL:
             for d in tree.body:
                 if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                     # a self-reference (recursion) does not count as a use

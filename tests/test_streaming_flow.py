@@ -840,6 +840,13 @@ def test_streaming_index_compaction(spark, tmp_path):
     # exactly one batch dir left per table
     for t in merged:
         assert sum(1 for e in os.listdir(t) if e.startswith("batch_id=")) == 1
+    # Bloom sidecars are rebuilt only for the tables the sink screens:
+    # the docs table never had them and does not get them
+    has_blooms = {
+        os.path.basename(t): bool(glob.glob(os.path.join(t, "batch_id=*", "_blooms")))
+        for t in merged
+    }
+    assert has_blooms == {"fps": True, "bands": True, "docs": False}
 
     # resume: exact + near dups of PRE-compaction docs still drop,
     # fresh docs survive — identical to the uncompacted control
