@@ -1,3 +1,4 @@
+from . import zipcache  # noqa: F401 — patches zipimport in every process that imports the package
 from .context import Context, build_session, ensure_shipped
 from .errors import ProcessorError, SchemaError
 from .flow import DataFrameStage, Flow, FuncStage, IterableStage, Stage
