@@ -117,6 +117,23 @@ def build_session(
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
         .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+        # Write checkpoint files (offsets, commits, source log, RocksDB
+        # changelogs and their checksum sidecars) through the FileSystem
+        # API instead of Spark's default FileContext manager. Without the
+        # native Hadoop library, FileContext.rename resolves symlinks via
+        # RawLocalFileSystem.getFileLinkStatus, which forks `readlink`
+        # from the driver/executor JVM on every call: 3-4.5 ms per spawn
+        # vs 0.19 ms for FileSystem.getFileStatus. On a 4-CPU host that
+        # was 253-262 → 78 process creations per trigger, walCommit and
+        # commitOffsets 25-29 → 5-7 ms each, and the RocksDB commit summed
+        # over 4 partitions 230-314 → 8-17 ms. The manager is still
+        # wrapped by ChecksumCheckpointFileManager (corruption detection
+        # unchanged) and the checkpoint file layout is identical, so
+        # existing checkpoints resume.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.enabled", "false")
         # the console progress bar writes \r-rewritten lines to stderr;
         # when a harness merges streams (2>&1) those fragments glue onto

@@ -38,10 +38,21 @@ from ..sources.table import SnapshotTable, iceberg_available
 
 
 def _atomic_write(path: str, payload: dict) -> None:
+    """Write ``payload`` as JSON to ``path`` atomically and durably: the
+    temp file is fsynced before the rename, and the parent directory
+    after it, so a power loss cannot leave a committed marker that is
+    empty or whose rename is lost."""
     tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as fh:
         json.dump(payload, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
     os.rename(tmp, path)
+    dir_fd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    try:
+        os.fsync(dir_fd)
+    finally:
+        os.close(dir_fd)
 
 
 def committed_ids(commit_dir: str) -> list[int]:
