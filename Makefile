@@ -1,4 +1,4 @@
-.PHONY: test package submit submit-stream bench oracle plans
+.PHONY: test package submit submit-stream oracle plans
 
 # CPU count of this host: the default parallelism of every target below
 NPROC := $(shell env -u OMP_NUM_THREADS nproc)
@@ -31,9 +31,6 @@ submit-stream: package
 		--py-files dist/dataflows_spark.zip \
 		scripts/submit_pipeline.py --clips $${CLIPS_PATH:?set CLIPS_PATH} --stream \
 		--out /tmp/dfs_submit_stream_out
-
-bench:
-	python bench.py
 
 oracle:
 	python scripts/check_oracle.py /root/testdata/sf0.01

@@ -1,6 +1,6 @@
 from . import zipcache  # noqa: F401 — patches zipimport in every process that imports the package
 from .context import Context, build_session, ensure_shipped
-from .errors import ProcessorError, SchemaError
+from .errors import ProcessorError
 from .flow import DataFrameStage, Flow, FuncStage, IterableStage, Stage
 from .materialize import eager_cache, eager_local_checkpoint, free_blocks, release_materialized
 from .package import TablePackage
@@ -12,7 +12,6 @@ __all__ = [
     "FuncStage",
     "IterableStage",
     "ProcessorError",
-    "SchemaError",
     "Stage",
     "TablePackage",
     "build_session",

@@ -15,8 +15,3 @@ class ProcessorError(Exception):
             f"stage #{processor_position} ({processor_name}) failed: {cause!r}"
         )
 
-
-class SchemaError(Exception):
-    """Raised at build time when a stage's schema expectations fail —
-    the analog of the reference's eager schema pass
-    (``dataflows/base/datastream_processor.py:78-80``)."""

@@ -174,19 +174,12 @@ def audio_neardup_pairs(
     max_ber: float = DEFAULT_MAX_BER,
     min_matches: int = DEFAULT_MIN_MATCHES,
     max_token_df: int = DEFAULT_MAX_TOKEN_DF,
-    materialize: bool = False,
 ) -> DataFrame:
     """Near-duplicate clip pairs ``(id_a < id_b, n_matches, lag, ber)``:
     half-token collision candidates → median-lag estimate → BER verify
     at that lag. Catches re-encodes across codecs, gain changes and
     hop-aligned time shifts of the same recording."""
-    from ..core import eager_cache
-
     fp = with_audio_fingerprint(df, bytes_col, codec_col, sr_col, id_col)
-    if materialize:
-        # the decode+FFT enrichment is the expensive leg — run it once,
-        # not once per consumer (CacheManager-owned, releasable)
-        fp = eager_cache(fp)
     toks = _half_tokens(fp)
     # posting-list cap: distinct-clip df per token, drop hot tokens
     ok = (

@@ -339,7 +339,6 @@ def jaccard_pairs(
     num_hashes: int = DEFAULT_NUM_HASHES,
     num_bands: int = DEFAULT_NUM_BANDS,
     sig_ngram: int = DEFAULT_NGRAM,
-    materialize: bool = True,
     hash_fn: str = DEFAULT_HASH_FN,
 ) -> DataFrame:
     """n-gram-Jaccard near-dup pairs with MinHash-band blocking
@@ -389,16 +388,14 @@ def jaccard_pairs(
 
     COMPUTE SHAPE: the band self-join and the two gram lookups each
     evaluate their child twice, so a fully-lazy plan runs the
-    md5-heavy enrichment 4×. The DEFAULT (``materialize=True``)
-    computes the combined enrichment ONCE into a local checkpoint and
-    derives all four uses from it — the md5 work runs exactly once,
-    which is what a production pipeline does by persisting the
-    signature table (measured 5.6×: 20.7s → 3.7s at sf0.1, the
-    eager checkpoint included). ``materialize=False`` keeps the plan
-    lazy with each side computing only what it needs — for composing
-    into a larger plan where eagerness is unacceptable. (An aliased
-    self-join is NOT the answer: Spark re-plans it as a mis-estimated
-    broadcast at scale — measured timeout at 120k docs.)"""
+    md5-heavy enrichment 4×. The banding table is therefore computed
+    ONCE, eagerly, into a releasable cache and all uses derive from it
+    — the md5 work runs exactly once, which is what a production
+    pipeline does by persisting the signature table (measured 5.6×:
+    20.7s → 3.7s at sf0.1, the eager materialization included). (An
+    aliased self-join is NOT the answer: Spark re-plans it as a
+    mis-estimated broadcast at scale — measured timeout at 120k
+    docs.)"""
     t = normalize_text(text_col)
     ghash = gram_hashes(text_col, ngram, hash_fn)
     _check_banding(num_hashes, num_bands)
@@ -410,14 +407,13 @@ def jaccard_pairs(
     banded_src = src.select(
         F.col(id_col).alias("id"), lband_expr.alias("lband"), bands_expr.alias("bands")
     )
-    if materialize:
-        # the banding table is the ONLY thing both self-join sides need;
-        # materializing it (narrow: id, lband, 2 band hashes) runs the
-        # minhash fold exactly once. eager_cache, not localCheckpoint:
-        # checkpoint blocks live outside the CacheManager and can never
-        # be unpersisted (see core/materialize.py) — a session running
-        # many dedup plans would accumulate pinned storage
-        banded_src = eager_cache(banded_src)
+    # the banding table is the ONLY thing both self-join sides need;
+    # materializing it (narrow: id, lband, 2 band hashes) runs the
+    # minhash fold exactly once. eager_cache, not localCheckpoint:
+    # checkpoint blocks live outside the CacheManager and can never
+    # be unpersisted (see core/materialize.py) — a session running
+    # many dedup plans would accumulate pinned storage
+    banded_src = eager_cache(banded_src)
     banded = banded_src.select("id", "lband", F.explode("bands").alias("b")).select(
         "id", "lband", F.col("b.band").alias("band"), F.col("b.band_hash").alias("band_hash")
     )
@@ -430,23 +426,20 @@ def jaccard_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    if materialize:
-        # gram-hash ONLY the docs that appear in a candidate pair — the
-        # verify set is bounded by banding, so this is O(candidates),
-        # not O(corpus) (measured 67s → ~30s at 120k docs)
-        cand = eager_cache(cand)
-        cand_ids = (
-            cand.select(F.col("id_a").alias("id"))
-            .unionByName(cand.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        lut = eager_cache(
-            src.select(F.col(id_col).alias("id"), F.col(text_col))
-            .join(cand_ids, on="id", how="left_semi")
-            .select("id", ghash.alias("grams"))
-        )
-    else:
-        lut = src.select(F.col(id_col).alias("id"), ghash.alias("grams"))
+    # gram-hash ONLY the docs that appear in a candidate pair — the
+    # verify set is bounded by banding, so this is O(candidates),
+    # not O(corpus) (measured 67s → ~30s at 120k docs)
+    cand = eager_cache(cand)
+    cand_ids = (
+        cand.select(F.col("id_a").alias("id"))
+        .unionByName(cand.select(F.col("id_b").alias("id")))
+        .distinct()
+    )
+    lut = eager_cache(
+        src.select(F.col(id_col).alias("id"), F.col(text_col))
+        .join(cand_ids, on="id", how="left_semi")
+        .select("id", ghash.alias("grams"))
+    )
     return (
         cand.join(lut.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a")), on="id_a")
         .join(lut.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b")), on="id_b")
@@ -463,17 +456,12 @@ def minhash_lsh_candidates(
     num_hashes: int = DEFAULT_NUM_HASHES,
     num_bands: int = DEFAULT_NUM_BANDS,
     ngram: int = DEFAULT_NGRAM,
-    materialize: bool = False,
     hash_fn: str = DEFAULT_HASH_FN,
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash banding: explode band
     hashes, self-equi-join on (band, band_hash) — shuffle-join on a
-    uniform key, no cross product.
-
-    ``materialize=True`` checkpoints the (narrow) banded table so the
-    gram+minhash work runs once instead of once per self-join side
-    (eager; measured ~2× at 120k docs) — the persisted-signature-table
-    shape a production pipeline uses.
+    uniform key, no cross product. The plan stays lazy, so it composes
+    into a larger plan (``jaccard_pairs`` is the eager verify path).
 
     RECALL: banded-LSH candidate recall for a pair at similarity s is
     1-(1-s^r)^b (r = num_hashes/num_bands, b = num_bands) — exact dups
@@ -488,8 +476,6 @@ def minhash_lsh_candidates(
     banded = sig.select("id", F.explode(minhash_bands(F.col("sig"), num_bands, rows_per_band)).alias("b")).select(
         "id", F.col("b.band").alias("band"), F.col("b.band_hash").alias("band_hash")
     )
-    if materialize:
-        banded = eager_cache(banded)
     a = banded.select(F.col("id").alias("id_a"), "band", "band_hash")
     b = banded.select(F.col("id").alias("id_b"), "band", "band_hash")
     return (

@@ -17,8 +17,6 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..core.materialize import eager_cache
-
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -270,7 +268,6 @@ def lsh_neardup_pairs(
     dim: int | None = None,
     bits: int = 8,
     seed: int = 42,
-    materialize: bool = False,
 ) -> DataFrame:
     """Embedding near-dup pairs, scale path: candidates come from an
     equi-self-join on the hyperplane LSH bucket (high-cosine pairs share
@@ -282,10 +279,8 @@ def lsh_neardup_pairs(
     exchange volume by the vector width. Vectors re-attach by id
     AFTER the candidate distinct, for the cosine verify only — the same
     narrow-candidates discipline ``jaccard_pairs`` applies to gram
-    arrays. ``materialize=True`` checkpoints the (narrow) signature
-    table so the signature expressions run once instead of once per
-    self-join side — the persisted-signature-table shape of a
-    production pipeline.
+    arrays. The plan stays lazy: the signature is a JVM-side array
+    expression that each self-join side evaluates.
 
     Pass ``dim`` explicitly on the scale path — the fallback infers it
     with a one-row driver action."""
@@ -294,10 +289,6 @@ def lsh_neardup_pairs(
         dim = len(first[0]) if first else 0
     sig = lsh_signature(vec_col, dim, bits, seed)
     keyed = df.select(F.col(id_col).alias("id"), sig.alias("sig"))
-    if materialize:
-        # releasable materialize-once (see core/materialize.py — NOT
-        # localCheckpoint, whose blocks can never be unpersisted)
-        keyed = eager_cache(keyed)
     a = keyed.select(F.col("id").alias("id_a"), "sig")
     b = keyed.select(F.col("id").alias("id_b"), "sig")
     cand = a.join(b, on="sig").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")

@@ -1,3 +1,3 @@
-from .clips import clips_df, transcripts_side_df, write_clips_table
+from .clips import clips_df, transcripts_side_df
 
-__all__ = ["clips_df", "transcripts_side_df", "write_clips_table"]
+__all__ = ["clips_df", "transcripts_side_df"]

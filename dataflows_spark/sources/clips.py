@@ -170,16 +170,3 @@ def transcripts_side_df(
 
     return spark.range(0, n_clips, 1, partitions).mapInPandas(gen, schema=TRANSCRIPTS_SIDE_SCHEMA)
 
-
-def write_clips_table(
-    spark: SparkSession,
-    path: str,
-    n: int,
-    seed: int = 42,
-    dur_min: int = 200,
-    dur_max: int = 15000,
-    partitions: int | None = None,
-) -> None:
-    """Materialize the clips table as parquet (Iceberg drop-in when the
-    runtime jar is present — see sources/table.py)."""
-    clips_df(spark, n, seed, dur_min, dur_max, partitions).write.mode("overwrite").parquet(path)

@@ -97,7 +97,7 @@ def clips_df(spark):
 
 
 def test_audio_neardup_pairs_finds_copies_only(clips_df):
-    pairs = afp.audio_neardup_pairs(clips_df, materialize=True).collect()
+    pairs = afp.audio_neardup_pairs(clips_df).collect()
     got = {(r["id_a"], r["id_b"]): r for r in pairs}
     # every copy of clip 0 must pair with it; no cross-recording pairs
     assert (0, 100) in got and (0, 101) in got and (0, 102) in got

@@ -122,10 +122,9 @@ def test_jaccard_pairs_is_equi_join(spark):
     from dataflows_spark.functions import dedup as ddp
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    # materialize=False: the default eagerly checkpoints the banding
-    # stage, which hides the join shape from the final plan — the lazy
-    # variant exposes the full logical shape under test
-    df = ddp.jaccard_pairs(docs, "text", "doc_id", threshold=0.8, materialize=False)
+    # the banding stage is eagerly cached; its join shape stays
+    # visible through the InMemoryRelation in the executed plan
+    df = ddp.jaccard_pairs(docs, "text", "doc_id", threshold=0.8)
     plan = _plan(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan

@@ -404,6 +404,26 @@ def test_connected_components_star_matches_propagation(spark):
     assert sp["rounds"] >= 1 and ss["rounds"] >= 1
 
 
+def test_release_materialized_unpins_connected_components(spark):
+    """Both connected-components variants return a lineage-truncated
+    frame whose blocks stay pinned until the caller releases them;
+    release_materialized() frees every RDD they left persisted. The
+    session is shared, so RDD id sets are compared, not counts."""
+    from dataflows_spark.core import release_materialized
+
+    def persistent() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    before = persistent()
+    for algorithm in ("propagation", "star"):
+        ddp.connected_components(pairs, algorithm=algorithm).collect()
+    added = persistent() - before
+    assert added  # each variant leaves its last round pinned
+    release_materialized()
+    assert not added & persistent()
+
+
 def test_deterministic_sample_reproducible_and_disjoint(spark):
     """md5-keyed sampling: identical survivors across runs, salt gives
     independent slices, rate lands near the target."""
